@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import phash
 
+# ngram_jaccard_pairs(hot_df=HOT_DF_DISABLED): the caller asserts no
+# shingle can be hot (a bounded slice), so the hot-key probe is skipped
+HOT_DF_DISABLED = 1 << 30
+
 
 def token_array(text_col):
     """Whitespace tokens with empty runs dropped — matches the oracle
@@ -302,7 +306,7 @@ def ngram_jaccard_pairs(
             256, 8 * dp
         )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    if hot_df >= (1 << 30):
+    if hot_df >= HOT_DF_DISABLED:
         # caller-asserted "no hot shingles possible" (bounded slices):
         # skip the probe ACTION entirely, not just guarantee its
         # emptiness — the plain join is exact either way

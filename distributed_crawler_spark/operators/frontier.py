@@ -48,11 +48,12 @@ class RoundResult:
 
 
 def with_retry_count(df: DataFrame) -> DataFrame:
-    """Back-compat shim: state written before the retry path existed has
-    no retry_count column — treat those rows as first attempts."""
+    """Back-compat shim: rows written before the retry path existed are
+    first attempts. Read under the declared state schema such a file's
+    retry_count is NULL; a caller's own frame may lack the column."""
     if "retry_count" not in df.columns:
-        df = df.withColumn("retry_count", F.lit(0))
-    return df
+        return df.withColumn("retry_count", F.lit(0))
+    return df.withColumn("retry_count", F.coalesce(F.col("retry_count"), F.lit(0)))
 
 
 def fetch_extract(
@@ -145,9 +146,9 @@ def schedule_candidates(
     # optional bloom prefilter lets bloom-proven-fresh candidates skip the
     # exact join (operators/bloom.py — result identical, tested)
     if cfg.use_bloom_prefilter or cfg.use_cuckoo_prefilter:
-        # size the filter WITHOUT a full pass over the seen set: the
-        # per-host counts table already carries the cumulative scheduled
-        # total (sum over ~#hosts rows, not 10^10 seen rows)
+        # size the filter by the seen-set size: the per-host counts sum
+        # to it. The scheduler derives its counts from seen, so either
+        # branch is one pass over seen
         if host_counts is not None:
             n_seen = (
                 host_counts.agg(F.sum("n_scheduled").alias("n")).collect()[0]["n"]

@@ -15,18 +15,20 @@ scale each directory is an Iceberg table and each round a snapshot):
         pending/round=R/    (url, host, depth, retry_count)
         cohort/round=R/     (url, host, depth, status, round, retry_count)
         extracted/round=R/  parse output (incl. parent depth)
-        seen/round=R/       (url, host) first attempts of round R
-        counts/round=R/     (host, n_scheduled) cumulative first-attempt
         lineage/round=R/    (round, partition_id, urls_in, urls_out, bytes, wall_ms)
         frontier_rollup/round=R/  compacted per-url frontier through round R
                             (written lazily by reporting calls; one table
                              replaces the O(R) cohort union)
 
+Every state read passes the table's declared schema (``SCHEMAS``), so no
+read runs a footer-inference job; a column an older layout lacks reads
+back as NULL, which the shims fill.
+
 Resume: the max round with a lineage marker is the last committed round;
-restart reads pending/round=R+1; seen is one partition-discovered read
-of seen/ (missing rounds backfilled from pending) and host-counts come
-from the cumulative counts table. (north_rule: "resumable from
-checkpoint with per-partition lineage + metrics".)
+restart reads pending/round=R+1. The URL-seen set and the per-host
+counts are not stored: seen is the first attempts of pending/round=0..R,
+read by explicit round paths, and counts group seen by host. (north_rule:
+"resumable from checkpoint with per-partition lineage + metrics".)
 """
 
 from __future__ import annotations
@@ -45,9 +47,26 @@ from .frontier import fetch_extract, schedule_candidates, with_retry_count
 from .politeness import host_budget_filter, robots_filter
 
 PENDING, COHORT, EXTRACTED, LINEAGE = "pending", "cohort", "extracted", "lineage"
-COUNTS = "counts"
-SEEN = "seen"
 ROLLUP = "frontier_rollup"
+
+_FRONTIER = "url STRING, host STRING, depth INT, status STRING, round INT, retry_count INT"
+
+# the DDL schema each state table's writer produces (pinned by
+# tests/test_crawl_parity.py::test_state_schemas_match_writers)
+SCHEMAS = {
+    PENDING: "url STRING, host STRING, depth INT, retry_count INT",
+    COHORT: _FRONTIER,
+    EXTRACTED: (
+        "url STRING, title STRING, description STRING, keywords STRING, "
+        "text STRING, links ARRAY<STRING>, language STRING, "
+        "fetch_ts TIMESTAMP, depth INT"
+    ),
+    LINEAGE: (
+        "round INT, partition_id INT, urls_in BIGINT, urls_out BIGINT, "
+        "bytes BIGINT, wall_ms INT"
+    ),
+    ROLLUP: _FRONTIER + ", last_round INT",
+}
 
 
 def _collapse_frontier(df: DataFrame) -> DataFrame:
@@ -129,68 +148,29 @@ class CrawlScheduler:
                 rounds.append(int(name.split("=")[1]))
         return sorted(rounds)
 
-    def _read(self, table: str, rnd: int) -> DataFrame:
-        return self.spark.read.parquet(_p(self._root, table, rnd))
+    def _read(self, table: str, *rounds: int) -> DataFrame:
+        """Rounds of one state table under its declared schema. Each
+        round is named by its path, never partition-discovered: a
+        directory scan would also pick up merge_upsert's ``round=R.tmp-*``
+        and ``.bak`` siblings."""
+        paths = [_p(self._root, table, r) for r in rounds]
+        return self.spark.read.schema(SCHEMAS[table]).parquet(*paths)
 
-    def _seen_and_counts(self, pending_round: int | None):
-        """seen = every URL ever scheduled (first attempts through the
-        not-yet-processed pending cohort).
-
-        Both state reads are INCREMENTAL (VERDICT r02 "What's wrong" #4 —
-        the old form re-unioned every cohort round each round, O(R) plan
-        nodes/reads per round → O(R²) over a crawl):
-
-          * seen/round=R holds round R's first-attempt (url, host) rows,
-            written once when round R is first processed; the full seen
-            set is then ONE partition-discovered parquet read of seen/
-            (at cluster scale: one Iceberg table appended per round,
-            bucketed on xxhash64(url) so the anti-join's seen side never
-            shuffles).
-          * counts/round=R holds the cumulative per-host scheduled totals
-            through pending cohort R, maintained as prior-counts +
-            new-cohort-counts — O(new URLs) per round."""
-        rnd = pending_round
-        if rnd is None:
-            return None, None
-        # backfill any missing seen partition (first processing of this
-        # round, legacy state dirs, or crash re-runs): retried rows were
-        # already recorded when first scheduled
-        for r in range(rnd + 1):
-            seen_path = _p(self._root, SEEN, r)
-            if not _exists(seen_path):
-                (
-                    with_retry_count(self._read(PENDING, r))
-                    .filter(F.col("retry_count") == 0)
-                    .select("url", "host")
-                    .write.mode("overwrite")
-                    .parquet(seen_path)
-                )
-        seen = self.spark.read.parquet(os.path.join(self._root, SEEN)).select(
-            "url", "host"
+    def _seen_and_counts(self, pending_round: int):
+        """seen = every URL ever scheduled: the first attempts of
+        pending/round=0..R (a retry was counted when first scheduled);
+        counts = (host, n_scheduled) over seen, the budget each host has
+        consumed. Neither is stored. The URL-seen anti-join scans all of
+        seen every round anyway, so the counts aggregate adds a second
+        scan of the same files, not a new cost order (at cluster scale:
+        pending bucketed on xxhash64(url), so the anti-join's seen side
+        never shuffles)."""
+        seen = (
+            with_retry_count(self._read(PENDING, *range(pending_round + 1)))
+            .filter(F.col("retry_count") == 0)
+            .select("url", "host")
         )
-        counts_path = _p(self._root, COUNTS, rnd)
-        if not _exists(counts_path):
-            # only FIRST-attempt rows consume budget: a retried URL was
-            # already counted when it was first scheduled
-            new = (
-                with_retry_count(self._read(PENDING, rnd))
-                .filter(F.col("retry_count") == 0)
-                .groupBy("host")
-                .agg(F.count("*").alias("n_scheduled"))
-            )
-            if rnd > 0 and _exists(_p(self._root, COUNTS, rnd - 1)):
-                prior = self._read(COUNTS, rnd - 1)
-                new = (
-                    prior.unionByName(new)
-                    .groupBy("host")
-                    .agg(F.sum("n_scheduled").alias("n_scheduled"))
-                )
-            elif rnd > 0:
-                # counts table missing (e.g. state from an older layout):
-                # rebuild from the full seen set once
-                new = seen.groupBy("host").agg(F.count("*").alias("n_scheduled"))
-            new.write.mode("overwrite").parquet(counts_path)
-        counts = self._read(COUNTS, rnd)
+        counts = seen.groupBy("host").agg(F.count("*").alias("n_scheduled"))
         return seen, counts
 
     # -- the loop --------------------------------------------------------
@@ -227,7 +207,7 @@ class CrawlScheduler:
             start_round = (committed[-1] + 1) if committed else 0
             pend_path = _p(self._root, PENDING, start_round)
             if not _exists(pend_path) or (
-                self.spark.read.parquet(pend_path).limit(1).count() == 0
+                self._read(PENDING, start_round).limit(1).count() == 0
             ):
                 # crawl already finished
                 return self.summary()
@@ -250,7 +230,7 @@ class CrawlScheduler:
             if not _exists(nxt):
                 break
             # empty next cohort ⇒ done
-            if self.spark.read.parquet(nxt).limit(1).count() == 0:
+            if self._read(PENDING, rnd + 1).limit(1).count() == 0:
                 break
             rnd += 1
         return self.summary()
@@ -258,68 +238,62 @@ class CrawlScheduler:
     def _run_round(self, rnd: int) -> None:
         t0 = time.monotonic()
         cfg = self.cfg
-        pending = with_retry_count(self._read(PENDING, rnd))
         seen, counts = self._seen_and_counts(rnd)
-
         cohort, extracted, fetched = fetch_extract(
-            pending, self.pages, rnd, cfg.flaky_mod
+            self._read(PENDING, rnd), self.pages, rnd, cfg.flaky_mod
         )
-        extracted.write.mode("overwrite").parquet(_p(self._root, EXTRACTED, rnd))
-        cohort.write.mode("overwrite").parquet(_p(self._root, COHORT, rnd))
-        # pending_{r+1} is ALWAYS written (even past the last processable
-        # round): unprocessed candidates/retries must surface as
-        # status='pending' frontier rows, not silently vanish.
-        # materialization barrier: schedule from the just-written extracted
-        # table so the parse UDF runs exactly once per round
-        extracted_m = self._read(EXTRACTED, rnd)
-        next_pending = schedule_candidates(
-            extracted_m, self.robots, seen, counts, cfg, rnd
-        )
-        # failed-URL retry re-feed (crawler_node.py:887-916): failures
-        # with budget left re-enter the next round at the SAME depth;
-        # they are already in `seen`, so the anti-join above can never
-        # emit them as candidates — no dedup needed within pending
-        retries = (
-            self._read(COHORT, rnd)
-            .filter(
+        # the fetch join runs once per round: Spark substitutes this cache
+        # into the extracted, cohort and lineage plans built on it; it is
+        # released when the round ends
+        fetched.persist()
+        try:
+            extracted.write.mode("overwrite").parquet(_p(self._root, EXTRACTED, rnd))
+            cohort.write.mode("overwrite").parquet(_p(self._root, COHORT, rnd))
+            # pending_{r+1} is ALWAYS written (even past the last
+            # processable round): unprocessed candidates/retries must
+            # surface as status='pending' frontier rows, not silently
+            # vanish. materialization barrier: schedule from the
+            # just-written extracted table so the parse UDF runs exactly
+            # once per round
+            next_pending = schedule_candidates(
+                self._read(EXTRACTED, rnd), self.robots, seen, counts, cfg, rnd
+            )
+            # failed-URL retry re-feed (crawler_node.py:887-916): failures
+            # with budget left re-enter the next round at the SAME depth;
+            # they are already in `seen`, so the anti-join above can never
+            # emit them as candidates — no dedup needed within pending
+            retries = cohort.filter(
                 (F.col("status") == "failed")
                 & (F.col("retry_count") < cfg.max_retries)
+            ).select(
+                "url", "host", "depth", (F.col("retry_count") + 1).alias("retry_count")
             )
-            .select(
-                "url",
-                "host",
-                "depth",
-                (F.col("retry_count") + 1).alias("retry_count"),
+            next_pending.unionByName(retries).write.mode("overwrite").parquet(
+                _p(self._root, PENDING, rnd + 1)
             )
-        )
-        next_pending.unionByName(retries).write.mode("overwrite").parquet(
-            _p(self._root, PENDING, rnd + 1)
-        )
 
-        # lineage: per-partition input/output/byte counts; committing this
-        # row is what marks the round durable (written LAST — the commit
-        # point; a crash before this re-runs the whole round idempotently)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = (
-            fetched.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("urls_in"),
-                F.sum(F.when(F.col("html").isNotNull(), 1).otherwise(0)).alias(
-                    "urls_out"
-                ),
-                F.coalesce(F.sum(F.length(F.col("html"))), F.lit(0)).alias("bytes"),
+            # lineage: per-partition input/output/byte counts over the
+            # partitions of the fetch join; committing this row is what
+            # marks the round durable (written LAST — the commit point; a
+            # crash before this re-runs the whole round idempotently)
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            html = F.col("html")
+            lineage = (
+                fetched.withColumn("partition_id", F.spark_partition_id())
+                .groupBy("partition_id")
+                .agg(
+                    F.count("*").alias("urls_in"),
+                    F.count(html).alias("urls_out"),
+                    F.coalesce(F.sum(F.length(html)), F.lit(0)).alias("bytes"),
+                )
+                .select(
+                    F.lit(rnd).alias("round"), "partition_id", "urls_in",
+                    "urls_out", "bytes", F.lit(wall_ms).alias("wall_ms"),
+                )
             )
-            .select(
-                F.lit(rnd).alias("round"),
-                "partition_id",
-                "urls_in",
-                "urls_out",
-                "bytes",
-                F.lit(wall_ms).alias("wall_ms"),
-            )
-        )
-        lineage.write.mode("overwrite").parquet(_p(self._root, LINEAGE, rnd))
+            lineage.write.mode("overwrite").parquet(_p(self._root, LINEAGE, rnd))
+        finally:
+            fetched.unpersist()
 
     def submit_urls(self, urls: DataFrame) -> int:
         """submit_url.py parity (client/submit_url.py:15-43: a crawl_url
@@ -333,51 +307,26 @@ class CrawlScheduler:
         set — merged into the next unprocessed pending cohort.
         ``run(resume=True)`` then drains them through the normal round
         machinery at depth 0. Returns the number actually scheduled."""
+        from ..sources.storage import merge_upsert
+
         committed = self.committed_rounds()
         nxt = committed[-1] + 1 if committed else 0
         seeded = seed_frontier(self.spark, urls, self.robots, self.cfg)
         pend_path = _p(self._root, PENDING, nxt)
-        if committed:
+        if committed or _exists(pend_path):
+            # through round nxt: a seeded-but-never-run job has only its
+            # round-0 cohort
             seen, _ = self._seen_and_counts(nxt)
             seeded = seeded.join(seen.select("url"), "url", "left_anti")
-        elif _exists(pend_path):
-            # seeded-but-never-run job: only the round-0 cohort exists
-            seeded = seeded.join(
-                self.spark.read.parquet(pend_path).select("url"),
-                "url",
-                "left_anti",
-            )
         n = seeded.count()
         if n == 0:
             return 0
-        # stage the seeded cohort to its own dir and read it back: the
-        # lazy `seeded` plan reads this round's seen partition, which is
-        # deleted below BEFORE the merge — re-executing the plan after
-        # that delete would hit missing files mid-merge
-        stage = os.path.join(self._root, "tmp_submit_stage")
-        if os.path.exists(stage):
-            shutil.rmtree(stage)
-        seeded.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
-        # the merged cohort invalidates any pre-derived seen/counts
-        # partition for this round (written against the PRE-merge
-        # pending). Drop them BEFORE merging (ADVICE r05): if the delete
-        # crashes they are simply re-derived from the still-unmerged
-        # pending, whereas deleting after the merge left a crash window
-        # where resume trusts stale pre-merge seen/counts (submitted urls
-        # absent from seen could be re-scheduled via discovered links,
-        # per-host budgets under-count)
-        for tbl in (SEEN, COUNTS):
-            p = _p(self._root, tbl, nxt)
-            if os.path.exists(p):
-                shutil.rmtree(p)
+        # seen is read from pending, so the swap that merges the cohort
+        # in also updates seen: no stored table can go stale on a crash
         if _exists(pend_path):
-            from ..sources.storage import merge_upsert
-
-            merge_upsert(self.spark, pend_path, staged, key="url")
+            merge_upsert(self.spark, pend_path, seeded, key="url")
         else:
-            staged.write.mode("overwrite").parquet(pend_path)
-        shutil.rmtree(stage)
+            seeded.write.mode("overwrite").parquet(pend_path)
         return n
 
     def resend_failed(self) -> int:
@@ -444,18 +393,14 @@ class CrawlScheduler:
         if not _exists(last_path):
             have = [r for r in committed if _exists(_p(self._root, ROLLUP, r))]
             base = have[-1] if have else None
-            parts = [] if base is None else [self._read(ROLLUP, base)]
-            parts += [
-                with_retry_count(self._read(COHORT, r)).select(
-                    "url", "host", "depth", "status", "round", "retry_count",
-                    F.col("round").alias("last_round"),
-                )
-                for r in committed
-                if base is None or r > base
-            ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
+            df = with_retry_count(
+                self._read(COHORT, *(r for r in committed if base is None or r > base))
+            ).select(
+                "url", "host", "depth", "status", "round", "retry_count",
+                F.col("round").alias("last_round"),
+            )
+            if base is not None:
+                df = self._read(ROLLUP, base).unionByName(df)
             collapsed = _collapse_frontier(df)
             try:
                 collapsed.write.mode("overwrite").parquet(last_path)
@@ -566,14 +511,15 @@ class CrawlScheduler:
             raise FileNotFoundError(
                 f"no crawl state found at {self.state_dir} (no committed rounds)"
             )
-        parts = []
-        for r in committed:
-            part = self._read(EXTRACTED, r)
-            if "depth" not in part.columns:
-                # pre-retry-layout shim (mirrors with_retry_count): before
-                # retries existed a page's round WAS its depth
-                part = part.withColumn("depth", F.lit(r))
-            parts.append(part)
+        # pre-retry-layout shim (mirrors with_retry_count): extracted
+        # tables written before the depth column read it back as NULL,
+        # and before retries existed a page's round WAS its depth
+        parts = [
+            self._read(EXTRACTED, r).withColumn(
+                "depth", F.coalesce(F.col("depth"), F.lit(r))
+            )
+            for r in committed
+        ]
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -585,11 +531,7 @@ class CrawlScheduler:
             raise FileNotFoundError(
                 f"no crawl state found at {self.state_dir} (no committed rounds)"
             )
-        parts = [self._read(LINEAGE, r) for r in committed]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return self._read(LINEAGE, *committed)
 
     def summary(self) -> dict:
         front = self.frontier()

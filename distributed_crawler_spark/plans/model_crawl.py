@@ -63,8 +63,7 @@ def model_bfs(
     )
     _LIVE_CACHES.append(cur)
     scheduled = cur
-    # prior host counts maintained INCREMENTALLY (mirror of the real
-    # scheduler, operators/scheduler.py counts/round=R): prior + new-cohort
+    # prior host counts maintained INCREMENTALLY: prior + new-cohort
     # counts each round — O(new URLs), not O(seen) re-aggregation. Each
     # round's cohort is cached (materialized once, on the caller's action)
     # and later rounds reference prior cohorts through those caches.

@@ -900,7 +900,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot_df hint: the slice is <= 100 docs, so no shingle can reach the
     # derived hot threshold (>= 256) — skip the hot-probe action
     return dedup.ngram_jaccard_pairs(
-        docs, shingle_n=1, threshold=0.8, hot_df=1 << 30
+        docs, shingle_n=1, threshold=0.8, hot_df=dedup.HOT_DF_DISABLED
     )
 
 

@@ -478,3 +478,118 @@ def test_submit_urls_into_existing_crawl(spark, corpus_dir):
     assert n0 >= 1
     got = c.run(resume=True)
     assert got["total_scheduled"] >= n0
+
+
+def _jobs_outside_sql(spark, group: str) -> list[int]:
+    """Jobs of ``group`` that no SQL execution launched. In a crawl round
+    only a parquet footer-inference job (a read without a schema) is one."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    in_sql = set()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    it = execs.iterator()
+    while it.hasNext():
+        ids = it.next().jobs().keys().iterator()
+        while ids.hasNext():
+            in_sql.add(ids.next())
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert jobs, f"no jobs recorded for {group}"
+    return sorted(j for j in jobs if j not in in_sql)
+
+
+def test_state_schemas_match_writers(spark, engine, tmp_path):
+    """Every declared state schema equals the schema of the file its
+    writer produced (a drifted SCHEMAS entry would read NULLs or fail),
+    and re-running a round launches no schema-inference job."""
+    from pyspark.sql.types import StructType
+
+    from distributed_crawler_spark.operators.scheduler import SCHEMAS, _p
+
+    last = engine.committed_rounds()[-1]
+    for table, ddl in SCHEMAS.items():
+        rnd = last if table == "frontier_rollup" else 0
+        written = spark.read.parquet(_p(engine._root, table, rnd)).schema
+        assert written == StructType.fromDDL(ddl), table
+
+    # re-run the last round on a copy of the parity state
+    state = str(tmp_path / "state")
+    shutil.copytree(engine.state_dir, state)
+    sched = CrawlScheduler(spark, engine.pages, engine.robots, state, engine.cfg)
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-drift-round", "re-run one crawl round")
+    try:
+        sched._run_round(last)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _jobs_outside_sql(spark, "schema-drift-round") == []
+
+
+def test_resume_from_pending_without_retry_count(spark, corpus_dir):
+    """A round-0 pending written before the retry path existed (no
+    retry_count column) reads back NULL under the declared schema; its
+    rows are first attempts, so resuming it reaches the oracle frontier."""
+    from distributed_crawler_spark.operators.scheduler import (
+        PENDING, _p, seed_frontier,
+    )
+
+    pages_d, robots_d, seeds_d = load_corpus(corpus_dir)
+    _, want, _, _ = simulate(pages_d, robots_d, seeds_d, 1, BUDGET)
+
+    state = "/tmp/dcs_state_legacy_pending"
+    shutil.rmtree(state, ignore_errors=True)
+    cfg = CrawlConfig(max_depth=1, max_urls_per_domain=BUDGET)
+    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
+    robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
+    seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
+    sched = CrawlScheduler(spark, pages, robots, state, cfg)
+    seed_frontier(spark, seeds, robots, cfg).drop("retry_count").write.parquet(
+        _p(sched._root, PENDING, 0)
+    )
+    sched.run(resume=True)
+    got = {r["url"]: (r["depth"], r["status"]) for r in sched.frontier().collect()}
+    assert got == want
+
+
+def test_seen_ignores_stray_merge_dirs(spark, corpus_dir):
+    """merge_upsert stages pending/round=N.tmp-* (and .bak) siblings; a
+    crash can leave one behind. Seen reads named rounds only, so a stray
+    holding the submitted urls neither blocks the submission nor changes
+    the URL-seen set the resumed crawl converges to (seeds only, with a
+    budget that never binds: both batches, robots-gated)."""
+    import os
+
+    from distributed_crawler_spark.operators.scheduler import PENDING, _p
+
+    from .oracle_sim import robots_allowed
+
+    pages_d, robots_d, seeds_d = load_corpus(corpus_dir)
+    cfg = CrawlConfig(max_depth=0, max_urls_per_domain=1000)
+    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
+    robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
+    seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
+
+    state = "/tmp/dcs_state_stray_tmp"
+    shutil.rmtree(state, ignore_errors=True)
+    sched = CrawlScheduler(spark, pages, robots, state, cfg)
+    sched.run(seeds=seeds)
+    crawled = {r["url"] for r in sched.url_seen().collect()}
+    extra = sorted(
+        u for u in pages_d if u not in crawled and robots_allowed(u, robots_d)
+    )[:3]
+    assert extra
+
+    nxt = sched.committed_rounds()[-1] + 1
+    stray = _p(sched._root, PENDING, nxt) + ".tmp-x"
+    spark.createDataFrame(
+        [(u, "stray", 0, 0) for u in extra],
+        "url string, host string, depth int, retry_count int",
+    ).write.parquet(stray)
+    assert os.path.isdir(stray)
+
+    extra_df = spark.createDataFrame([(u,) for u in extra], "url string")
+    assert sched.submit_urls(extra_df) == len(extra)
+    sched.run(resume=True)
+
+    _, want, _, _ = simulate(pages_d, robots_d, seeds_d + extra, 0, 1000)
+    assert {r["url"] for r in sched.url_seen().collect()} == set(want)
