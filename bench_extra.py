@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Per-query measurement harness for the optimization rounds (guide §1):
-times individual registry queries with the noop sink (best-of-N), labels
-jobs, and optionally dumps .explain("formatted") to a file per query.
+times individual registry queries with the noop sink (best-of-N), counts
+the Spark jobs of each call through a job group (printed as ``jobs=N``
+beside ``TIMING``; the last rep's count), and optionally dumps
+.explain("formatted") to a file per query.
 
 bench.py is FROZEN for driver measurement; this file exists so targeted
 before/after numbers and plan captures never touch it.
@@ -49,7 +51,9 @@ def main() -> None:
         registry._cached_index(spark, args.sf)
         registry._cached_multifield_raw_index(spark, args.sf)
 
+    sc = spark.sparkContext
     out: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name in names:
         fn = registry.QUERIES[name]
         if args.explain:
@@ -62,16 +66,24 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"
                 ))
         best = None
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"bench-extra: {name}")
+        for rep in range(args.reps):
+            # one job group per call: its job count covers the DataFrame
+            # build (eager checkpoints, schema inference) and the write
+            group = f"bench-extra-{name}-{rep}"
+            sc.setJobGroup(group, f"bench-extra: {name}")
             t0 = time.monotonic()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             dt = time.monotonic() - t0
             best = dt if best is None else min(best, dt)
-        spark.sparkContext.setJobDescription(None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
         out[name] = round(best, 3)
-        print(f"TIMING {name} {out[name]}", flush=True)
-    print(json.dumps({"sf": args.sf, "cpus": args.cpus, "queries": out, "total": round(sum(out.values()), 3)}))
+        print(f"TIMING {name} {out[name]} jobs={jobs[name]}", flush=True)
+    print(json.dumps({
+        "sf": args.sf, "cpus": args.cpus, "queries": out, "jobs": jobs,
+        "total": round(sum(out.values()), 3),
+    }))
 
 
 if __name__ == "__main__":

@@ -96,10 +96,14 @@ def model_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def model_links_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arithmetic link graph: (src_url, dst_url), 3 out-links per page to
-    (a*d+b) % N (N baked in as a literal — see _doc_count)."""
-    pages = model_pages_df(spark, sf_dir)
-    n = F.lit(_doc_count(spark, sf_dir))
+    """Arithmetic link graph: (src_url, dst_url, dst_doc_id), 3 out-links
+    per page to (a*d+b) % N (N baked in as a literal — see _doc_count)."""
+    return links_of_pages(model_pages_df(spark, sf_dir), _doc_count(spark, sf_dir))
+
+
+def links_of_pages(pages: DataFrame, n_docs: int) -> DataFrame:
+    """model_links_df over an already-built model pages frame."""
+    n = F.lit(n_docs)
     d = F.col("doc_id")
     targets = F.array(*[(F.lit(a) * d + F.lit(b)) % n for a, b in LINK_COEFFS])
     exploded = pages.select(
@@ -115,15 +119,18 @@ def model_links_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def model_robots_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic robots rules: (host, path_prefix) disallow rows.
     Hosts absent from this table are allowed by default (utils.py:64-66)."""
-    pages = model_pages_df(spark, sf_dir)
+    return robots_of_pages(model_pages_df(spark, sf_dir))
+
+
+def robots_of_pages(pages: DataFrame) -> DataFrame:
+    """model_robots_df over an already-built model pages frame."""
+    hosts = pages.select("host_id", "host").distinct()
     hid = F.col("host_id")
     return (
-        pages.select("host_id", "host").distinct()
-        .filter(hid % ROBOTS_MOD == ROBOTS_PAGE_REMAINDER)
+        hosts.filter(hid % ROBOTS_MOD == ROBOTS_PAGE_REMAINDER)
         .select("host", F.lit(ROBOTS_PAGE_PREFIX).alias("path_prefix"))
         .unionByName(
-            pages.select("host_id", "host").distinct()
-            .filter(hid % ROBOTS_MOD == ROBOTS_ALL_REMAINDER)
+            hosts.filter(hid % ROBOTS_MOD == ROBOTS_ALL_REMAINDER)
             .select("host", F.lit("/").alias("path_prefix"))
         )
     )
@@ -131,11 +138,12 @@ def model_robots_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def model_seeds_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeds = urls of doc_id < SEED_COUNT."""
-    return (
-        model_pages_df(spark, sf_dir)
-        .filter(F.col("doc_id") < SEED_COUNT)
-        .select("url")
-    )
+    return seeds_of_pages(model_pages_df(spark, sf_dir)).select("url")
+
+
+def seeds_of_pages(pages: DataFrame) -> DataFrame:
+    """The seed rows of a model pages frame (any columns, doc_id kept)."""
+    return pages.filter(F.col("doc_id") < SEED_COUNT)
 
 
 def url_for_doc(d):

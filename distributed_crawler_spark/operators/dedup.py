@@ -729,7 +729,8 @@ def remove_dup_spans(
     doc's text is rebuilt from the surviving tokens (whitespace
     re-canonicalized — the same tokenizer semantics every other text
     operator here uses). Returns (id, clean_text, n_tokens, n_removed);
-    clean_text = '' when the whole doc was duplicated spans.
+    clean_text = '' when the whole doc was duplicated spans. ``id_col``
+    must be non-null.
 
     Shape (round 7 — windows removed): per-doc token-hash ARRAY, span
     fingerprints as a map-side transform (no sort shuffle on the doc id
@@ -768,7 +769,9 @@ def remove_dup_spans(
     # "appears in >= 2 DISTINCT docs" ⟺ min(doc) != max(doc) over the
     # RAW span occurrences (a span repeating only within one doc has
     # min == max) — one map-side-combinable aggregate instead of a
-    # full-frame (id, k1, k2) distinct exchange followed by the count
+    # full-frame (id, k1, k2) distinct exchange followed by the count.
+    # Contract: id_col is non-null (a document key). min/max skip NULLs,
+    # so a NULL-id occurrence would not count as a second doc here.
     dup_keys = (
         spans.groupBy("k1", "k2")
         .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))

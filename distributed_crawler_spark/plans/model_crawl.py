@@ -1,10 +1,16 @@
 """Crawl BFS over the arithmetic corpus model — the oracle-checkable twin
 of the HTML-corpus scheduler (operators/scheduler.py).
 
-Same gate order as the reference's _enqueue_url (master_node.py:315-448):
+Same gates as the reference's _enqueue_url (master_node.py:315-448):
 depth → seen-dedup → robots → host budget (consumed in canonical url-asc
 order); the "fetch" is the links equi-join. The DuckDB oracle is the same
 BFS unrolled into per-round CTEs by ``bfs_sql``.
+
+Robots is applied once, to the page set, not once per round. That is
+exact: whether robots admit a URL depends only on its host and path, so
+the gate is a per-row filter that commutes with the link join and the
+URL-seen anti-join. The inputs are built from one pages frame and
+checkpointed, and each round plans against small checkpoints.
 """
 
 from __future__ import annotations
@@ -17,86 +23,75 @@ from ..corpus import (
     LINK_COEFFS,
     MEGA_LT,
     MEGA_MOD,
-    model_links_df,
+    _doc_count,
+    links_of_pages,
     model_pages_df,
-    model_robots_df,
-    model_seeds_df,
     model_sql_ctes,
+    robots_of_pages,
+    seeds_of_pages,
 )
 from ..operators.politeness import host_budget_filter, robots_filter
 
-# cached DataFrames of the most recent model_bfs invocation (unpersisted
-# at the start of the next one — see the note inside model_bfs)
-_LIVE_CACHES: list[DataFrame] = []
+
+def model_crawl_inputs(
+    spark: SparkSession, sf_dir: str, budget: int, with_links: bool = True
+) -> tuple[DataFrame, DataFrame | None]:
+    """Local checkpoints of the round-0 schedule (url, host) — seeds gated
+    by robots and the host budget — and, if ``with_links``, of the link
+    graph cut to robots-admissible targets (src_url, url, host, doc_id)."""
+    pages = model_pages_df(spark, sf_dir)
+    admissible = robots_filter(
+        pages.select("url", "host", "doc_id"), robots_of_pages(pages)
+    )
+    if with_links:  # read by the seed and the link joins: gate it once
+        admissible = admissible.localCheckpoint()
+    sched0 = (
+        host_budget_filter(seeds_of_pages(admissible), None, budget)
+        .select("url", "host")
+        .localCheckpoint()
+    )
+    if not with_links:
+        return sched0, None
+    links = (
+        links_of_pages(pages, _doc_count(spark, sf_dir))
+        .select("src_url", F.col("dst_url").alias("url"))
+        .join(admissible, "url")
+    )
+    return sched0, links.localCheckpoint()
+
+
+def fresh_targets(links: DataFrame, frontier: DataFrame, seen: DataFrame) -> DataFrame:
+    """One BFS expansion: the distinct targets (url, host, doc_id) linked
+    from ``frontier``'s urls and absent from ``seen``'s."""
+    return (
+        links.join(frontier.select(F.col("url").alias("src_url")), "src_url")
+        .select("url", "host", "doc_id")
+        .distinct()
+        .join(seen.select("url"), "url", "left_anti")
+    )
+
+
+def host_counts(sched: DataFrame) -> DataFrame:
+    """(host, n_scheduled): the budget already consumed per host."""
+    return sched.groupBy("host").agg(F.count("*").cast("long").alias("n_scheduled"))
 
 
 def model_bfs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_depth: int = 2,
-    budget: int = 100,
+    spark: SparkSession, sf_dir: str, max_depth: int = 2, budget: int = 100
 ) -> DataFrame:
     """Scheduled set (url, host, depth) of a BFS crawl over the arithmetic
     link graph."""
-    # caches from the PREVIOUS invocation are dropped here: the returned
-    # DataFrame stays fully lazy (no extra actions inside the loop — they
-    # cost ~35% of the flagship query's wall), yet repeated invocations in
-    # one session never accumulate storage (round-1 verdict #5)
-    for df in _LIVE_CACHES:
-        df.unpersist()
-    _LIVE_CACHES.clear()
-
-    pages = model_pages_df(spark, sf_dir).select("url", "host").cache()
-    # the link graph is re-joined every round — cache it once
-    links = model_links_df(spark, sf_dir).select("src_url", "dst_url").cache()
-    _LIVE_CACHES.extend([pages, links])
-    robots = model_robots_df(spark, sf_dir)
-    seeds = model_seeds_df(spark, sf_dir)
-
-    cand0 = seeds.join(pages, "url").select(
-        "url", "host", F.lit(0).alias("depth")
-    )
-    cur = (
-        host_budget_filter(robots_filter(cand0, robots), None, budget)
-        .select("url", "host", "depth")
-        .cache()
-    )
-    _LIVE_CACHES.append(cur)
-    scheduled = cur
-    # prior host counts maintained INCREMENTALLY: prior + new-cohort
-    # counts each round — O(new URLs), not O(seen) re-aggregation. Each
-    # round's cohort is cached (materialized once, on the caller's action)
-    # and later rounds reference prior cohorts through those caches.
-    counts = cur.groupBy("host").agg(
-        F.count("*").cast("long").alias("n_scheduled")
-    )
+    sched0, links = model_crawl_inputs(spark, sf_dir, budget)
+    sched = sched0.withColumn("depth", F.lit(0))
     for rnd in range(1, max_depth + 1):
-        cand = (
-            links.join(cur.select(F.col("url").alias("src_url")), "src_url")
-            .select(F.col("dst_url").alias("url"))
-            .distinct()
-            .join(pages, "url")
-            .withColumn("depth", F.lit(rnd))
-        )
-        fresh = cand.join(scheduled.select("url"), "url", "left_anti")
-        fresh = robots_filter(fresh, robots)
-        cur = (
-            host_budget_filter(fresh, counts, budget)
-            .select("url", "host", "depth")
-            .cache()
-        )
-        _LIVE_CACHES.append(cur)
-        counts = (
-            counts.unionByName(
-                cur.groupBy("host").agg(
-                    F.count("*").cast("long").alias("n_scheduled")
-                )
-            )
-            .groupBy("host")
-            .agg(F.sum("n_scheduled").cast("long").alias("n_scheduled"))
-        )
-        scheduled = scheduled.unionByName(cur)
-    return scheduled
+        # `sched` is the whole round state: the frontier is its last
+        # depth, the seen set is all of it, the budget used its host counts
+        fresh = fresh_targets(links, sched.filter(F.col("depth") == rnd - 1), sched)
+        cur = host_budget_filter(fresh, host_counts(sched), budget)
+        sched = sched.unionByName(cur.select("url", "host", F.lit(rnd).alias("depth")))
+        if rnd < max_depth:  # the last round stays lazy for the caller
+            sched = sched.localCheckpoint()
+    return sched
 
 
 def _round0_cte(budget: int) -> str:
@@ -279,18 +274,8 @@ def model_retry(
     attempt until max_retries; urls with fail_times > max_retries end
     'failed'. Returns (url, host, status, retry_count) — the final
     frontier row per url. Iterative DataFrame loop, all native."""
-    pages = model_pages_df(spark, sf_dir).select("url", "host")
-    robots = model_robots_df(spark, sf_dir)
-    seeds = model_seeds_df(spark, sf_dir)
-    cand0 = seeds.join(pages, "url").select("url", "host", F.lit(0).alias("depth"))
-    # the attempt loop below references this tiny frontier once per
-    # attempt; cache it so the model scan+gates run once, not 4x
-    pend = (
-        host_budget_filter(robots_filter(cand0, robots), None, budget)
-        .select("url", "host")
-        .cache()
-    )
-    _LIVE_CACHES.append(pend)
+    # a checkpoint: the attempt loop below reads it once per attempt
+    pend, _ = model_crawl_inputs(spark, sf_dir, budget, with_links=False)
     # portable deterministic hash (== DuckDB ('0x'||substr(md5(u),1,15))::BIGINT)
     ft = (
         F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast("long")

@@ -30,8 +30,11 @@ from . import porter_sql
 from .model_crawl import (
     anchor_texts_sql,
     bfs_sql,
+    fresh_targets,
+    host_counts,
     html_round0_sql,
     model_bfs,
+    model_crawl_inputs,
     model_retry,
     retry_sql,
 )
@@ -1655,46 +1658,22 @@ FROM rankd WHERE rn + n0 <= {budget} ORDER BY url
 def q_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Importance-first frontier scheduling — PageRank composed INTO the
     politeness gate: round 0 schedules seeds in canonical url order (no
-    graph signal exists yet); the round-1 candidate set (link join →
-    seen anti-join → robots) then consumes each host's REMAINING budget
+    graph signal exists yet); the round-1 candidate set (link join to
+    the robots-admissible pages → seen anti-join, model_crawl's inputs)
+    then consumes each host's REMAINING budget
     in (score DESC, url) order via the same salted two-phase window as
     the canonical crawl (host_budget_filter order_cols) — the classic
     fix for FIFO frontiers wasting politeness budget on unimportant
     pages (Cho/Garcia-Molina/Page 1998). Integer scores keep the
     ranking bit-exact across engines; the url tiebreak makes the
     window total."""
-    from ..corpus import (
-        model_links_df,
-        model_pages_df,
-        model_robots_df,
-        model_seeds_df,
-    )
-    from ..operators.politeness import host_budget_filter, robots_filter
-
     budget = 100
-    pages = model_pages_df(spark, sf_dir).select("url", "host", "doc_id")
-    robots = model_robots_df(spark, sf_dir)
-    links = model_links_df(spark, sf_dir).select("src_url", "dst_url")
-    cand0 = model_seeds_df(spark, sf_dir).join(pages, "url").select("url", "host")
-    sched0 = host_budget_filter(
-        robots_filter(cand0, robots), None, budget
-    ).select("url", "host")
-    counts = sched0.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_scheduled")
-    )
-    cand1 = (
-        links.join(sched0.select(F.col("url").alias("src_url")), "src_url")
-        .select(F.col("dst_url").alias("url"))
-        .distinct()
-        .join(pages, "url")
-    )
-    fresh = robots_filter(
-        cand1.join(sched0.select("url"), "url", "left_anti"), robots
-    )
+    sched0, links = model_crawl_inputs(spark, sf_dir, budget)
+    fresh = fresh_targets(links, sched0, sched0)
     pr = _model_pagerank(spark, sf_dir)
     cand = fresh.join(pr, fresh.doc_id == pr.node).select("url", "host", "score")
     out = host_budget_filter(
-        cand, counts, budget,
+        cand, host_counts(sched0), budget,
         order_cols=[F.col("score").desc(), F.col("url")],
     )
     return out.select("url", "host", "score", "host_budget_rank").orderBy("url")

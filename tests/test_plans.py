@@ -438,3 +438,38 @@ def test_host_pagerank_contraction_prunes_to_doc_id(spark, sf_dir):
     assert scans, "no parquet scan in plan"
     for ln in scans:
         assert "text" not in ln, ln
+
+
+def test_model_crawl_queries_leave_no_cached_plans(spark, sf_dir):
+    """Repeated crawl_bfs / retry_cohort calls must not pile up cached
+    plans in the session: their materialized inputs and round state are
+    local checkpoints, which the CacheManager never holds."""
+    from distributed_crawler_spark.plans import registry
+
+    spark.catalog.clearCache()
+    for _ in range(3):
+        registry.QUERIES["crawl_bfs"](spark, sf_dir)
+        registry.QUERIES["retry_cohort"](spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_crawl_bfs_job_count(spark, sf_dir):
+    """One warm crawl_bfs call (build plus noop write) runs a bounded
+    number of Spark jobs: the model inputs are built once and each round
+    plans against small checkpoints."""
+    from distributed_crawler_spark.corpus import _doc_count
+    from distributed_crawler_spark.plans import registry
+
+    _doc_count(spark, sf_dir)  # warm: the cold call adds the doc-count jobs
+    sc = spark.sparkContext
+    group = "test-crawl-bfs-job-count"
+    sc.setJobGroup(group, "crawl_bfs job count")
+    try:
+        registry.QUERIES["crawl_bfs"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    # 30 measured on this fixture; the per-round union/cache form ran 45
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 30
