@@ -19,25 +19,14 @@ class CrawlConfig:
     max_depth: int = 3
     max_urls_per_domain: int = 100
     job_id: str = "job-test-0001"
-    user_agent: str = "DistributedCrawler/1.0"
     respect_robots: bool = True
-    # skew handling: hosts holding more than this fraction of the round's
-    # candidates are salted into `salt_buckets` sub-partitions
-    skew_host_fraction: float = 0.05
+    # skew handling: the host-budget window salts every host into
+    # `salt_buckets` sub-partitions (politeness.host_budget_filter)
     salt_buckets: int = 16
-    # URL-seen bloom prefilter (north_rule): candidates the bloom proves
-    # unseen bypass the exact anti-join; false positives fall through to
-    # it (strict optimization — off by default at toy scale where the
-    # filter build outweighs the join it saves)
-    use_bloom_prefilter: bool = False
     # failed-fetch retry budget (crawler_node.py:160 max_retries=3 and
     # :887-916 _retry_failed_tasks): a failed URL re-enters the next
     # round's pending with retry_count+1 until the budget is exhausted
     max_retries: int = 3
-    # deletable-filter variant of the URL-seen prefilter (the cuckoo
-    # role, operators/cuckoo.py): counting (bucket, fp) cells support
-    # retiring frontier rows; same strict-optimization contract as bloom
-    use_cuckoo_prefilter: bool = False
     # fetch fault-injection for tests: when > 0, the fetch of ``url``
     # transiently fails while retry_count < crc32(url) % flaky_mod —
     # deterministic on both the engine (F.crc32) and oracle (zlib.crc32)

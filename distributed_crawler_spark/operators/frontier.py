@@ -16,10 +16,12 @@ Scale notes:
     both bucketed on xxhash64(url) (Iceberg bucket transform at cluster
     scale) it is a storage-partitioned join — the 10^10-row corpus never
     shuffles.
-  * the URL-seen anti-join is the scaling bottleneck (SURVEY §7.4.3);
-    the seen side stays bucketed on xxhash64(url) so only the candidate
-    side shuffles. (Bloom prefilter planned as a strict optimization —
-    correctness never depends on it.)
+  * URL-seen dedup is one exact ``left_anti`` join against the seen
+    set, the scaling bottleneck (SURVEY §7.4.3); the seen side stays
+    bucketed on xxhash64(url) so only the candidate side shuffles. A
+    membership filter would only pay if it persisted between rounds and
+    were probed instead of the exact set — a separate design that needs
+    its own workload and measurement.
   * all per-row work is in one Arrow-vectorized parse UDF; everything
     else is JVM-native and whole-stage-codegen'd.
 """
@@ -113,7 +115,6 @@ def schedule_candidates(
     seen: DataFrame,
     host_counts: DataFrame | None,
     cfg: CrawlConfig,
-    round_no: int,
 ) -> DataFrame:
     """Phase 2: link discovery → depth gate → URL-seen anti-join → robots
     → salted budget window → pending_{round+1}. Pass a *materialized*
@@ -141,31 +142,9 @@ def schedule_candidates(
         .withColumn("host", get_domain(F.col("url")))
     )
 
-    # URL-seen dedup: left anti vs every URL ever scheduled
-    # (master_node.py:336-339,352-391 collapsed into one set-oriented join);
-    # optional bloom prefilter lets bloom-proven-fresh candidates skip the
-    # exact join (operators/bloom.py — result identical, tested)
-    if cfg.use_bloom_prefilter or cfg.use_cuckoo_prefilter:
-        # size the filter by the seen-set size: the per-host counts sum
-        # to it. The scheduler derives its counts from seen, so either
-        # branch is one pass over seen
-        if host_counts is not None:
-            n_seen = (
-                host_counts.agg(F.sum("n_scheduled").alias("n")).collect()[0]["n"]
-                or 1
-            )
-        else:
-            n_seen = seen.count()
-        if cfg.use_cuckoo_prefilter:
-            from .cuckoo import cuckoo_anti_join
-
-            fresh = cuckoo_anti_join(candidates, seen.select("url"), n_seen)
-        else:
-            from .bloom import bloom_anti_join
-
-            fresh = bloom_anti_join(candidates, seen.select("url"), n_seen)
-    else:
-        fresh = candidates.join(seen.select("url"), on="url", how="left_anti")
+    # URL-seen dedup: exact left anti join vs every URL ever scheduled
+    # (master_node.py:336-339,352-391 collapsed into one set-oriented join)
+    fresh = candidates.join(seen.select("url"), on="url", how="left_anti")
 
     if cfg.respect_robots:
         fresh = robots_filter(fresh, robots)
@@ -200,9 +179,7 @@ def crawl_round(
     cohort, extracted, fetched = fetch_extract(
         pending, pages, round_no, cfg.flaky_mod
     )
-    next_pending = schedule_candidates(
-        extracted, robots, seen, host_counts, cfg, round_no
-    )
+    next_pending = schedule_candidates(extracted, robots, seen, host_counts, cfg)
     return RoundResult(cohort, extracted, next_pending, fetched)
 
 

@@ -7,30 +7,19 @@ synthesized media row decodes a REAL container format, all pure stdlib:
 
 * images — uncompressed 24-bit BMP (round 5) and 8-bit RGB/RGBA PNG
   (full chunk walk, zlib inflate, filter-type 0-4 row unfiltering);
-  baseline JFIF JPEG additionally decodes/re-encodes for arbitrary
-  user payloads (operators/jpeg.py: Annex-K tables, canonical Huffman,
-  separable IDCT, restart markers) but is NOT synthesized — lossy
-  Huffman sizes aren't oracle-derivable arithmetically;
 * audio — RIFF/WAVE 16-bit PCM (chunk walk, fmt/data parse, real
   sample extraction; features are PCM stats: RMS, zero crossings...);
 * video — RIFF/AVI with uncompressed bottom-up DIB frames (the
   Video-for-Windows raw format; nested-LIST RIFF walk, dims from the
-  strf BITMAPINFOHEADER, true per-frame demux for frame sampling), and
-  MJPEG-in-MP4 (operators/mp4.py: full ISO BMFF box walk, general
-  stsc/stco/stsz sample-range reconstruction, per-sample JFIF decode)
-  for arbitrary user payloads — like JPEG it stays out of the
-  synthesized table because its sample sizes are Huffman-content-
-  dependent, i.e. not oracle-derivable arithmetically.
+  strf BITMAPINFOHEADER, true per-frame demux for frame sampling).
 
 Decode extracts true header metadata and payload-derived features,
-resize does real nearest-neighbor resampling (per-frame for AVI/MP4,
-sample resampling for WAV) re-encoded in the source format. JPEG covers
-baseline AND progressive (SOF2) with 4:4:4/4:2:2/4:2:0 sampling
-(operators/jpeg.py). The one format this container genuinely cannot
-decode (MP3 — the Layer-III synthesis window tables aren't derivable
-offline and there's no PIL/ffmpeg) falls back to the clearly-marked
-deterministic ``_fake_decode`` stub, so arbitrary user data stays
-handled and a real deployment only swaps the fallback for soundfile.
+resize does real nearest-neighbor resampling (per-frame for AVI,
+sample resampling for WAV) re-encoded in the source format. These four
+are the formats the oracles pin. Every other payload — JPEG, MP4, MP3,
+corrupt bytes — falls back to the clearly-marked deterministic
+``_fake_decode`` stub, so arbitrary user data stays handled and a real
+deployment only swaps the fallback for PIL / soundfile / pyav.
 """
 
 from __future__ import annotations
@@ -324,19 +313,14 @@ def decode_png(payload: bytes) -> dict | None:
 
 
 def decode_image(payload: bytes):
-    """(decoded dict, format) for any format this module really decodes
-    — BMP, PNG, then baseline JPEG — or (None, None)."""
+    """(decoded dict, format) for any image format this module really
+    decodes — BMP, then PNG — or (None, None)."""
     d = decode_bmp(payload)
     if d is not None:
         return d, "bmp"
     d = decode_png(payload)
     if d is not None:
         return d, "png"
-    from .jpeg import decode_jpeg
-
-    d = decode_jpeg(payload)
-    if d is not None:
-        return d, "jpeg"
     return None, None
 
 
@@ -737,13 +721,11 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
 
 def _fake_decode(payload: bytes, media_id: int) -> dict:
-    """STUB for formats this container can't decode (no PIL/soundfile/
-    pyav — now only MP3 and exotic/corrupt payloads): deterministic
-    fake metadata + an 8-dim feature derived from the bytes. A real
-    deployment replaces this fallback only — BMP/PNG/WAV/AVI here plus
-    baseline+progressive JPEG at 4:4:4/4:2:2/4:2:0 (operators/jpeg.py)
-    and MJPEG MP4 (operators/mp4.py) are real decodes, and no
-    synthesized row hits this path anymore."""
+    """STUB for every format this module doesn't decode (JPEG, MP4, MP3,
+    corrupt payloads — no PIL/soundfile/pyav here): deterministic fake
+    metadata + an 8-dim feature derived from the bytes. A real
+    deployment replaces this fallback only — BMP/PNG/WAV/AVI are real
+    decodes, and no synthesized row hits this path."""
     n = len(payload)
     width = 32 * (1 + media_id % 16)
     height = 32 * (1 + (media_id // 16) % 16)
@@ -752,10 +734,10 @@ def _fake_decode(payload: bytes, media_id: int) -> dict:
 
 
 def _decode_one(payload: bytes, media_id: int) -> dict:
-    """REAL decode for BMP/PNG/baseline-JPEG (true header dims,
-    pixel-derived feature), WAV (width = sample count, height = channels, PCM-derived
-    feature), AVI, and MJPEG MP4 (true stream dims, first-frame pixel
-    feature); _fake_decode fallback for everything else."""
+    """REAL decode for BMP/PNG (true header dims, pixel-derived
+    feature), WAV (width = sample count, height = channels, PCM-derived
+    feature) and AVI (true stream dims, first-frame pixel feature);
+    _fake_decode fallback for everything else."""
     d, _fmt = decode_image(payload)
     if d is not None:
         return {
@@ -780,24 +762,14 @@ def _decode_one(payload: bytes, media_id: int) -> dict:
             "height": v["height"],
             "feature": _bmp_feature(v["frames"][0]),
         }
-    from .mp4 import decode_mp4
-
-    m = decode_mp4(payload)
-    if m is not None:
-        return {
-            "n_bytes": len(payload),
-            "width": m["width"],
-            "height": m["height"],
-            "feature": _bmp_feature(m["frames"][0]),
-        }
     return _fake_decode(payload, media_id)
 
 
 def decode_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     """mapInPandas decode: binary payload → typed metadata + feature
     vector. Partition-streaming (never materializes the binary column on
-    the driver); Arrow moves the bytes in batches. BMP payloads decode
-    for real; other formats hit the labeled stub."""
+    the driver); Arrow moves the bytes in batches. BMP/PNG/WAV/AVI
+    payloads decode for real; other formats hit the labeled stub."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -869,8 +841,8 @@ def transcode_images(media: DataFrame, target: str | None = None) -> DataFrame:
     """Lossless image transcode (mapInPandas): decode each payload with
     the real codecs and re-encode the SAME pixel grid in another real
     format — ``target`` names it ('bmp'/'png'), or None flips each row
-    to the OTHER format (bmp<->png; a jpeg source goes to png). Rows
-    whose payload doesn't decode as an image are dropped (use
+    to the OTHER format (bmp<->png). Rows whose payload doesn't decode
+    as a BMP or PNG image — a JPEG included — are dropped (use
     decode_features to observe them). Because both encoders are
     deterministic and uncompressed/stored-block, the output byte size
     is an arithmetic function of the decoded dimensions — which is what
@@ -921,11 +893,10 @@ def transcode_images(media: DataFrame, target: str | None = None) -> DataFrame:
 
 def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
     """Resize: every REALLY-decoded format gets a REAL nearest-neighbor
-    resample re-encoded as a valid file of the SAME format — BMP/PNG/
-    baseline-JPEG to
+    resample re-encoded as a valid file of the SAME format — BMP/PNG to
     the target pixel dimensions, each AVI frame likewise, WAV resampled
     to target_w x target_h samples (the pixel budget, the audio analog
-    of a thumbnail). Formats the container can't decode keep the
+    of a thumbnail). Other formats (JPEG, MP4, ...) keep the
     deterministic fake transform (payload truncated/tiled to the pixel
     budget). Same mapInPandas dataflow either way — a real deployment
     swaps only the fallback for PIL.Image.resize / soxr / pyav."""
@@ -935,28 +906,12 @@ def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> Da
             rows = []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                from .mp4 import decode_mp4, make_mp4
-
                 d, fmt = decode_image(raw)
                 wv = decode_wav(raw) if d is None else None
                 av = decode_avi(raw) if d is None and wv is None else None
-                mp = (
-                    decode_mp4(raw)
-                    if d is None and wv is None and av is None
-                    else None
-                )
                 if d is not None:
                     px, sw, sh = d["pixels"], d["width"], d["height"]
-                    if fmt == "png":
-                        enc = make_png
-                    elif fmt == "jpeg":
-                        from .jpeg import make_jpeg
-
-                        def enc(w, h, fn):
-                            return make_jpeg(w, h, fn, quality=90)
-
-                    else:
-                        enc = make_bmp
+                    enc = make_png if fmt == "png" else make_bmp
                     resized = enc(
                         target_w,
                         target_h,
@@ -981,20 +936,6 @@ def resize_media(media: DataFrame, target_w: int = 64, target_h: int = 64) -> Da
                         target_w,
                         target_h,
                         [frame_fn(px) for px in av["frames"]],
-                    )
-                elif mp is not None:
-                    sw, sh = mp["width"], mp["height"]
-
-                    def mp4_frame_fn(px):
-                        return lambda x, y: px[y * sh // target_h][
-                            x * sw // target_w
-                        ]
-
-                    resized = make_mp4(
-                        target_w,
-                        target_h,
-                        [mp4_frame_fn(px) for px in mp["frames"]],
-                        fps=mp["timescale"] or 10,
                     )
                 else:
                     budget = target_w * target_h
@@ -1027,11 +968,9 @@ def sample_frames(media: DataFrame, frame_size: int = 32, every_k: int = 4) -> D
     """Frame sampling for video payloads (one-to-many mapInPandas — the
     UDTF shape): AVI payloads are REALLY demuxed — every k-th '00db'
     DIB frame is emitted with its true byte length and the md5 of its
-    actual frame buffer — and MP4 payloads likewise via the ISO BMFF
-    sample-table walk (every k-th sample's exact JFIF bytes). Other
-    payloads keep the labeled stub (fixed-size chunking), which a real
-    deployment replaces with pyav; ``frame_size`` only applies to that
-    fallback."""
+    actual frame buffer. Other payloads (MP4 included) keep the labeled
+    stub (fixed-size chunking), which a real deployment replaces with
+    pyav; ``frame_size`` only applies to that fallback."""
     import hashlib
 
     def run(batches):
@@ -1051,23 +990,6 @@ def sample_frames(media: DataFrame, frame_size: int = 32, every_k: int = 4) -> D
                                 "frame_idx": i,
                                 "frame_bytes": len(frame),
                                 "frame_md5": hashlib.md5(frame).hexdigest(),
-                            }
-                        )
-                    continue
-                from .mp4 import decode_mp4
-
-                mp = decode_mp4(raw)
-                if mp is not None:
-                    # real ISO-BMFF demux: every k-th sample's exact
-                    # JFIF bytes out of the stsz/stco/stsc walk
-                    for i in range(0, mp["n_frames"], every_k):
-                        sample = mp["raw_samples"][i]
-                        rows.append(
-                            {
-                                "media_id": int(mid),
-                                "frame_idx": i,
-                                "frame_bytes": len(sample),
-                                "frame_md5": hashlib.md5(sample).hexdigest(),
                             }
                         )
                     continue

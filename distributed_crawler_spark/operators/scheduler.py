@@ -92,12 +92,7 @@ def _exists(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def seed_frontier(
-    spark: SparkSession,
-    seeds: DataFrame,
-    robots: DataFrame,
-    cfg: CrawlConfig,
-) -> DataFrame:
+def seed_frontier(seeds: DataFrame, robots: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """Normalize seed URLs (master_node.py:266) and apply the same gates
     candidates face (robots, host budget) to produce round-0 pending."""
     cand = (
@@ -200,7 +195,7 @@ class CrawlScheduler:
             # state_dir must be untouched
             if os.path.isdir(self._root):
                 shutil.rmtree(self._root)
-            pending0 = seed_frontier(self.spark, seeds, self.robots, cfg)
+            pending0 = seed_frontier(seeds, self.robots, cfg)
             pending0.write.mode("overwrite").parquet(_p(self._root, PENDING, 0))
             start_round = 0
         else:
@@ -256,7 +251,7 @@ class CrawlScheduler:
             # just-written extracted table so the parse UDF runs exactly
             # once per round
             next_pending = schedule_candidates(
-                self._read(EXTRACTED, rnd), self.robots, seen, counts, cfg, rnd
+                self._read(EXTRACTED, rnd), self.robots, seen, counts, cfg
             )
             # failed-URL retry re-feed (crawler_node.py:887-916): failures
             # with budget left re-enter the next round at the SAME depth;
@@ -311,7 +306,7 @@ class CrawlScheduler:
 
         committed = self.committed_rounds()
         nxt = committed[-1] + 1 if committed else 0
-        seeded = seed_frontier(self.spark, urls, self.robots, self.cfg)
+        seeded = seed_frontier(urls, self.robots, self.cfg)
         pend_path = _p(self._root, PENDING, nxt)
         if committed or _exists(pend_path):
             # through round nxt: a seeded-but-never-run job has only its

@@ -2534,7 +2534,7 @@ def q_crawl_html_round0(spark: SparkSession, sf_dir: str) -> DataFrame:
     robots = spark.read.parquet(os.path.join(corpus, "robots.parquet"))
     seeds = spark.read.parquet(os.path.join(corpus, "seeds.parquet"))
     cfg = CrawlConfig()
-    pending0 = seed_frontier(spark, seeds, robots, cfg)
+    pending0 = seed_frontier(seeds, robots, cfg)
     res = crawl_round(pending0, pages, robots, pending0.select("url"), None, cfg, 0)
     return res.next_pending.orderBy("url")
 

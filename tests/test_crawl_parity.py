@@ -543,7 +543,7 @@ def test_resume_from_pending_without_retry_count(spark, corpus_dir):
     robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
     seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
     sched = CrawlScheduler(spark, pages, robots, state, cfg)
-    seed_frontier(spark, seeds, robots, cfg).drop("retry_count").write.parquet(
+    seed_frontier(seeds, robots, cfg).drop("retry_count").write.parquet(
         _p(sched._root, PENDING, 0)
     )
     sched.run(resume=True)

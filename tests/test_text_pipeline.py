@@ -341,212 +341,6 @@ def test_avi_codec_round_trip():
     assert multimodal.decode_wav(raw) is None
 
 
-def test_jpeg_codec_round_trip():
-    """Pure-python baseline JFIF JPEG codec (operators/jpeg.py):
-    flat-color blocks survive exactly, smooth gradients within
-    quantization error, restart-marker streams (DRI + RSTn, byte-aligned
-    DC-predictor resets) decode identically to unsegmented ones,
-    grayscale works, and garbage / truncation / progressive SOF2 /
-    other formats are rejected. JPEG is lossy so — unlike BMP/PNG —
-    sizes are Huffman-content-dependent and the synthetic media table
-    never uses it; decode_image still dispatches it for user payloads."""
-    from distributed_crawler_spark.operators import multimodal
-    from distributed_crawler_spark.operators.jpeg import decode_jpeg, make_jpeg
-
-    flat = lambda x, y: (40, 90, 200)  # noqa: E731
-    grad = lambda x, y: (x * 3 % 256, y * 5 % 256, (x + y) % 256)  # noqa: E731
-
-    # flat color: DC-only blocks, bit-exact after YCbCr round trip
-    d = decode_jpeg(make_jpeg(24, 16, flat, quality=90))
-    assert (d["width"], d["height"]) == (24, 16)
-    assert all(px == flat(0, 0) for row in d["pixels"] for px in row)
-
-    # smooth gradient: within quantization error at q90, incl. non-8
-    # multiple dims (edge-replicated partial MCUs)
-    for w, h, ri in ((40, 24, 0), (16, 8, 1), (40, 24, 2), (17, 9, 3)):
-        raw = make_jpeg(w, h, grad, quality=90, restart_interval=ri)
-        if ri:
-            assert b"\xff\xdd" in raw  # DRI segment present
-            assert any(bytes((0xFF, 0xD0 + i)) in raw for i in range(8))
-        d = decode_jpeg(raw)
-        assert (d["width"], d["height"]) == (w, h), (w, h, ri)
-        err = max(
-            abs(d["pixels"][y][x][c] - grad(x, y)[c])
-            for y in range(h)
-            for x in range(w)
-            for c in range(3)
-        )
-        assert err <= 4, (w, h, ri, err)
-
-    # restart segmentation must not change the decoded image
-    a = decode_jpeg(make_jpeg(40, 24, grad, quality=90))
-    b = decode_jpeg(make_jpeg(40, 24, grad, quality=90, restart_interval=2))
-    assert a["pixels"] == b["pixels"]
-
-    # lower quality -> smaller file (quant tables really scale)
-    assert len(make_jpeg(40, 24, grad, quality=30)) < len(
-        make_jpeg(40, 24, grad, quality=90)
-    )
-
-    # grayscale single-component scan
-    d = decode_jpeg(make_jpeg(9, 6, lambda x, y: (x * 11 + y * 7) % 256, gray=True))
-    assert (d["width"], d["height"]) == (9, 6)
-    assert all(px[0] == px[1] == px[2] for row in d["pixels"] for px in row)
-
-    # rejection: garbage, truncation, malformed progressive (flipping
-    # SOF0->SOF2 leaves a baseline SOS whose Ss=0/Se=63 violates
-    # G.1.1.1.1), cross-format
-    raw = make_jpeg(16, 8, grad)
-    assert decode_jpeg(b"not a jpeg") is None
-    assert decode_jpeg(raw[:40]) is None
-    prog = bytearray(raw)
-    prog[raw.find(b"\xff\xc0") + 1] = 0xC2
-    assert decode_jpeg(bytes(prog)) is None
-    assert decode_jpeg(multimodal.make_bmp(4, 4, grad)) is None
-    assert decode_jpeg(multimodal.make_png(4, 4, grad)) is None
-    assert multimodal.decode_bmp(raw) is None
-    assert multimodal.decode_png(raw) is None
-
-    # decode_image dispatch picks it up for user payloads
-    d, fmt = multimodal.decode_image(raw)
-    assert fmt == "jpeg" and (d["width"], d["height"]) == (16, 8)
-
-
-def test_jpeg_subsampled_round_trip():
-    """4:2:2 and 4:2:0 chroma subsampling (the common web-JPEG shapes):
-    encoder average-pools chroma and interleaves (hi x vi) blocks per
-    MCU, decoder reconstructs via nearest-neighbor upsampling — flat
-    color is exact, smooth gradients within pooling+quantization error,
-    restart markers and non-MCU-multiple dims included; sampling
-    factors above 2 are still rejected."""
-    from distributed_crawler_spark.operators.jpeg import decode_jpeg, make_jpeg
-
-    flat = lambda x, y: (40, 90, 200)  # noqa: E731
-    grad = lambda x, y: (x * 3 % 256, y * 5 % 256, (x + y) % 256)  # noqa: E731
-
-    for ss, tol in (("422", 4), ("420", 6)):
-        d = decode_jpeg(make_jpeg(24, 16, flat, quality=90, subsample=ss))
-        assert all(px == flat(0, 0) for row in d["pixels"] for px in row), ss
-        for w, h, ri in ((40, 24, 0), (17, 9, 3), (16, 8, 1)):
-            raw = make_jpeg(w, h, grad, quality=90, restart_interval=ri, subsample=ss)
-            d = decode_jpeg(raw)
-            assert (d["width"], d["height"]) == (w, h), (ss, w, h, ri)
-            err = max(
-                abs(d["pixels"][y][x][c] - grad(x, y)[c])
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            assert err <= tol, (ss, w, h, ri, err)
-
-    # restart segmentation still changes nothing
-    a = decode_jpeg(make_jpeg(40, 24, grad, quality=90, subsample="420"))
-    b = decode_jpeg(
-        make_jpeg(40, 24, grad, quality=90, subsample="420", restart_interval=2)
-    )
-    assert a["pixels"] == b["pixels"]
-
-    # 4:2:0 spends fewer chroma blocks -> smaller file when chroma is
-    # busy (a smooth gradient's chroma already compresses to nothing)
-    busy = lambda x, y: ((x * 37 + y * 91) % 256, (x * 53) % 256, (y * 71) % 256)  # noqa: E731
-    assert len(make_jpeg(40, 24, busy, subsample="420")) < len(
-        make_jpeg(40, 24, busy, subsample="444")
-    )
-
-    # sampling factor 4 is rejected (patch the SOF samp byte)
-    raw = bytearray(make_jpeg(16, 8, grad, subsample="420"))
-    sof = raw.find(b"\xff\xc0")
-    raw[sof + 11] = 0x41  # Y sampling 4x1
-    assert decode_jpeg(bytes(raw)) is None
-
-
-def test_jpeg_progressive_round_trip():
-    """Progressive (SOF2) decode: a progressive encode of the SAME
-    quantized coefficients must reconstruct pixel-identically to the
-    baseline encode — both spectral-selection-only and successive-
-    approximation scan scripts (DC first/refine, AC first/refine with
-    ZRL-in-refinement), color and grayscale, across qualities; plus a
-    handcrafted EOB-run (EOB2) stream, which Annex-K-table encoders
-    never emit but real progressive files do."""
-    import random
-    import struct
-
-    from distributed_crawler_spark.operators import jpeg as J
-    from distributed_crawler_spark.operators.jpeg import (
-        decode_jpeg,
-        make_jpeg,
-        make_progressive_jpeg,
-    )
-
-    grad = lambda x, y: (x * 3 % 256, y * 5 % 256, (x + y) % 256)  # noqa: E731
-    rng = random.Random(99)
-    tbl = [
-        [(rng.randrange(256), rng.randrange(256), rng.randrange(256)) for _ in range(48)]
-        for _ in range(32)
-    ]
-    noise = lambda x, y: tbl[y][x]  # noqa: E731
-
-    for fn in (grad, noise):
-        for w, h in ((16, 8), (17, 9), (48, 32)):
-            base = decode_jpeg(make_jpeg(w, h, fn, quality=50))
-            for approx in (True, False):
-                p = decode_jpeg(make_progressive_jpeg(w, h, fn, quality=50, approx=approx))
-                assert p is not None, (w, h, approx)
-                assert p["pixels"] == base["pixels"], (w, h, approx)
-
-    g = lambda x, y: (x * 11 + y * 7) % 256  # noqa: E731
-    bg = decode_jpeg(make_jpeg(9, 6, g, gray=True))
-    for approx in (True, False):
-        pg = decode_jpeg(make_progressive_jpeg(9, 6, g, gray=True, approx=approx))
-        assert pg and pg["pixels"] == bg["pixels"], approx
-
-    # handcrafted EOB-run: 16x8 grayscale, two blocks; AC scan places one
-    # coefficient in block 0 then EOB2 ends block 0 AND covers block 1
-    # (custom 2-symbol DHT: 0x01 at '00', EOB2 0x10 at '01')
-    def seg(marker, body):
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    qt = [16] * 64
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([16] * 64))
-    out += seg(0xC2, struct.pack(">BHHB", 8, 8, 16, 1) + bytes([1, 0x11, 0]))
-    out += seg(0xC4, bytes([0x00]) + bytes(J.DC_LUMA_BITS) + bytes(J.DC_LUMA_VALS))
-    cbits = [0] * 16
-    cbits[1] = 2  # two 2-bit codes
-    out += seg(0xC4, bytes([0x10]) + bytes(cbits) + bytes([0x01, 0x10]))
-    # DC scan: both blocks DC diff 0 (category 0 = Annex-K code '00')
-    w = J._BitWriter()
-    dc = J._canonical_codes(J.DC_LUMA_BITS, J.DC_LUMA_VALS)
-    for _ in range(2):
-        code, ln = dc[0]
-        w.write(code, ln)
-    w.flush()
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + w.out
-    # AC scan: (r=0,s=1) coeff +1 at zigzag 1, then EOB2 (extra bit 0)
-    w = J._BitWriter()
-    w.write(0b00, 2)  # symbol 0x01
-    w.write(1, 1)     # magnitude bits: +1
-    w.write(0b01, 2)  # symbol 0x10 = EOB2
-    w.write(0, 1)     # EOB-run extension bit -> run = 2
-    w.flush()
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0])) + w.out
-    out += b"\xff\xd9"
-    d = decode_jpeg(bytes(out))
-    assert d is not None and (d["width"], d["height"]) == (16, 8)
-    # block 0 has the AC coefficient (non-flat), block 1 is flat gray
-    left = {d["pixels"][y][x] for y in range(8) for x in range(8)}
-    right = {d["pixels"][y][x] for y in range(8) for x in range(8, 16)}
-    assert len(right) == 1 and len(left) > 1
-
-    # malformed progressive scans are still rejected: DC scan with Se>0
-    bad = bytearray(make_progressive_jpeg(16, 8, grad))
-    # first SOS: patch Se byte (body = [ns, (cid,tab)*ns, Ss, Se, AhAl])
-    s = bad.find(b"\xff\xda")
-    ln = struct.unpack_from(">H", bad, s + 2)[0]
-    bad[s + 2 + ln - 2] = 63  # Se of the DC scan
-    assert decode_jpeg(bytes(bad)) is None
-
-
 def test_stateful_session_stream(spark):
     import datetime as dt
 
@@ -642,20 +436,41 @@ def test_multimodal_resize_and_frames(spark, sf_dir):
             want = hashlib.md5(av["raw_frames"][r["frame_idx"]]).hexdigest()
             assert r["frame_md5"] == want
 
-    # a user-supplied JPEG payload resizes through the same path and
-    # comes back re-encoded as a decodable 16x16 JPEG
-    from distributed_crawler_spark.operators.jpeg import make_jpeg
+    # payloads no codec here decodes (JPEG SOI/JFIF bytes, an MP4 ftyp
+    # box) take the labeled _fake_decode fallback on every path
+    import struct
 
-    jpg = make_jpeg(40, 24, lambda x, y: (x * 3 % 256, y * 5 % 256, (x + y) % 256))
-    user = spark.createDataFrame(
-        [(999, "image", bytearray(jpg))], schema="media_id long, kind string, payload binary"
+    jpg = b"\xff\xd8\xff\xe0\x00\x10JFIF\x00" + bytes(9) + b"\xff\xd9"
+    mp4 = (
+        struct.pack(">I", 24) + b"ftypisom" + struct.pack(">I", 512) + b"isomiso2"
+        + struct.pack(">I", 184) + b"mdat" + bytes((i * 7) % 251 for i in range(176))
     )
-    (row,) = multimodal.resize_media(user, 16, 16).collect()
-    d, fmt = multimodal.decode_image(bytes(row["payload"]))
-    assert fmt == "jpeg" and (d["width"], d["height"]) == (16, 16)
+    user = spark.createDataFrame(
+        [(999, "image", bytearray(jpg)), (1000, "video", bytearray(mp4))],
+        schema="media_id long, kind string, payload binary",
+    )
+    feats = {r["media_id"]: r for r in multimodal.decode_features(user).collect()}
+    for mid, raw in ((999, jpg), (1000, mp4)):
+        want = multimodal._fake_decode(raw, mid)
+        got = feats[mid]
+        assert (got["n_bytes"], got["width"], got["height"]) == (
+            len(raw), 32 * (1 + mid % 16), 32 * (1 + (mid // 16) % 16)
+        )
+        assert list(got["feature"]) == want["feature"]
+    # resize tiles/truncates the raw bytes to the 16x16 pixel budget
+    small = {r["media_id"]: r for r in multimodal.resize_media(user, 16, 16).collect()}
+    for mid, raw in ((999, jpg), (1000, mp4)):
+        want = bytes(raw[i % len(raw)] for i in range(256))
+        assert bytes(small[mid]["payload"]) == want
+    # frames: the video row is cut into fixed 32-byte chunks, every 2nd kept
+    chunks = multimodal.sample_frames(user, frame_size=32, every_k=2).collect()
+    assert [tuple(r) for r in chunks] == [
+        (1000, i, 32, hashlib.md5(mp4[i * 32 : (i + 1) * 32]).hexdigest())
+        for i in (0, 2, 4)
+    ]
 
     # transcode: image rows flip format losslessly (same pixel grid),
-    # non-image rows are dropped, a JPEG source lands on PNG
+    # non-image rows are dropped
     imgs = media.filter(F.col("kind") == "image")
     trans = {r["media_id"]: r for r in multimodal.transcode_images(media).collect()}
     assert set(trans) == {r["media_id"] for r in imgs.collect()}
@@ -671,9 +486,8 @@ def test_multimodal_resize_and_frames(spark, sf_dir):
         assert out_fmt == r["dst_format"]
         assert out["pixels"] == orig["pixels"], mid  # lossless
         assert r["dst_bytes"] == len(bytes(r["payload"]))
-    (jrow,) = multimodal.transcode_images(user).collect()
-    assert (jrow["src_format"], jrow["dst_format"]) == ("jpeg", "png")
-    assert multimodal.decode_png(bytes(jrow["payload"])) is not None
+    # neither fallback payload decodes as an image: both rows are dropped
+    assert multimodal.transcode_images(user).collect() == []
 
 
 def test_search_cache_ttl_and_eviction():
