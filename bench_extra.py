@@ -2,7 +2,8 @@
 """Per-query measurement harness for the optimization rounds (guide §1):
 times individual registry queries with the noop sink (best-of-N), counts
 the Spark jobs of each call through a job group (printed as ``jobs=N``
-beside ``TIMING``; the last rep's count), and optionally dumps
+beside ``TIMING``; the last rep's count) and the classes codegen compiled
+during it (``compiles=N``, also the last rep's), and optionally dumps
 .explain("formatted") to a file per query.
 
 bench.py is FROZEN for driver measurement; this file exists so targeted
@@ -38,7 +39,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from distributed_crawler_spark.plans import registry
-    from distributed_crawler_spark.session import get_spark
+    from distributed_crawler_spark.session import codegen_compile_count, get_spark
 
     spark = get_spark(cores=args.cpus, app_name="bench-extra")
     names = (
@@ -54,6 +55,7 @@ def main() -> None:
     sc = spark.sparkContext
     out: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         fn = registry.QUERIES[name]
         if args.explain:
@@ -71,17 +73,23 @@ def main() -> None:
             # build (eager checkpoints, schema inference) and the write
             group = f"bench-extra-{name}-{rep}"
             sc.setJobGroup(group, f"bench-extra: {name}")
+            c0 = codegen_compile_count(spark)
             t0 = time.monotonic()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             dt = time.monotonic() - t0
             best = dt if best is None else min(best, dt)
+            compiles[name] = codegen_compile_count(spark) - c0
             jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
         out[name] = round(best, 3)
-        print(f"TIMING {name} {out[name]} jobs={jobs[name]}", flush=True)
+        print(
+            f"TIMING {name} {out[name]} jobs={jobs[name]} compiles={compiles[name]}",
+            flush=True,
+        )
     print(json.dumps({
         "sf": args.sf, "cpus": args.cpus, "queries": out, "jobs": jobs,
+        "compiles": compiles,
         "total": round(sum(out.values()), 3),
     }))
 

@@ -34,13 +34,22 @@ class CrawlConfig:
     flaky_mod: int = 0
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The driver heap when SPARK_GRAFT_DRIVER_MEM is unset: 48g, or 40% of
+    the host's physical memory if that is less. A heap sized past physical
+    memory grows until the OS kills the JVM."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, int(phys_bytes * 0.4) >> 20)}m"
+
+
 @dataclass(frozen=True)
 class EngineConfig:
     """Session-level knobs; env-overridable for the bench harness."""
 
     cores: int = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions: int = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "0")) or 0
-    driver_memory: str = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_memory: str = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     sf_dir: str = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # AQE partition-coalescing floor (spark.sql.adaptive.coalescePartitions.
     # minPartitionSize, default 1m). The default is sized for I/O-bound

@@ -334,23 +334,22 @@ def ngram_jaccard_pairs(
         return _jaccard_filter(cand, sizes, id_col, threshold)
 
     t_eff = threshold - 1e-4  # round(., 4) boundary guard for the BOUND filters
+    # one broadcast relation of the hot keys, flagged, serves the stats
+    # left join and the hot/cold semi/anti splits
+    hot_rel = F.broadcast(hot_keys.withColumn("_hot", F.lit(1)))
     # hot path: per-doc total size AND hot-shingle count come from ONE
     # pass (left join against the broadcast hot keys + one aggregate)
     # and are materialized once — sizes/hsz are one row per doc and
     # referenced by the hd probe plus four broadcast joins each
     stats = (
-        sh.join(
-            F.broadcast(hot_keys.withColumn("_hot", F.lit(1))),
-            ["k1", "k2"],
-            "left",
-        )
+        sh.join(hot_rel, ["k1", "k2"], "left")
         .groupBy(id_col)
         .agg(F.count("*").alias("sz"), F.count("_hot").alias("h"))
         .localCheckpoint(eager=True)
     )
     sizes = stats.select(id_col, "sz")
-    hot = sh.join(F.broadcast(hot_keys), ["k1", "k2"], "left_semi")
-    cold = sh.join(F.broadcast(hot_keys), ["k1", "k2"], "left_anti")
+    hot = sh.join(hot_rel, ["k1", "k2"], "left_semi")
+    cold = sh.join(hot_rel, ["k1", "k2"], "left_anti")
     # only docs that HAVE hot shingles, like the groupBy-over-hot form
     # (consumers coalesce the missing rows to 0)
     hsz = stats.filter(F.col("h") > 0).select(id_col, "h")

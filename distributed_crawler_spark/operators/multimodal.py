@@ -765,7 +765,7 @@ def _decode_one(payload: bytes, media_id: int) -> dict:
     return _fake_decode(payload, media_id)
 
 
-def decode_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """mapInPandas decode: binary payload → typed metadata + feature
     vector. Partition-streaming (never materializes the binary column on
     the driver); Arrow moves the bytes in batches. BMP/PNG/WAV/AVI

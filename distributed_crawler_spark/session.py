@@ -22,6 +22,21 @@ from pyspark.sql import SparkSession
 
 from .config import EngineConfig
 
+# Capacity of Spark's LRU cache of compiled whole-stage-codegen and
+# expression classes (spark.sql.codegen.cache.maxEntries, a static conf,
+# default 100). The engine re-plans the same few shapes every crawl round
+# and registry call, but one benchmark process holds more distinct classes
+# than 100 (about 220 in a `queries` process, 190 in a `crawl` process), so
+# at the default every class is evicted before it is needed again and each
+# pass recompiles it. Sized well above that repertoire.
+# The cache is keyed by the generated source, and by default a whole-stage
+# class is named after its codegen stage id. AQE numbers stages as it
+# creates them, in an order that follows which stages finish first, so
+# the same stage code got a new name, and was compiled again, whenever
+# that order changed between calls. useIdInClassName=false drops the id
+# from the class name only; plans and explain output keep it.
+CODEGEN_CACHE_ENTRIES = 2048
+
 
 def get_spark(
     cores: int | None = None,
@@ -52,6 +67,8 @@ def get_spark(
             str(64 * 1024 * 1024),
         )
         .config("spark.driver.memory", engine.driver_memory)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -104,6 +121,14 @@ def _ship_package(spark: SparkSession) -> None:
     # addPyFile is idempotent for an identical path; content changes get a
     # new fingerprinted name, so failures here are real and must surface.
     spark.sparkContext.addPyFile(archive)
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this session's JVM so far (Spark's
+    CodegenMetrics compilation-time histogram counts one per compile; a
+    codegen cache hit adds nothing)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def stop_spark() -> None:

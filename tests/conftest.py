@@ -6,10 +6,9 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
-# The engine's default driver heap (EngineConfig, 48g) is sized for the
-# bench host. On a smaller test machine one session-long JVM grows its
-# heap past physical memory before it collects, and the OS kills it
-# mid-suite; the suite's sf0.001 inputs need a few GB at most.
+# The engine's default driver heap (EngineConfig: 48g, or 40% of host
+# memory if less) is sized for the bench host; the suite's sf0.001
+# inputs need a few GB at most, so one session-long JVM is kept smaller.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 

@@ -1,15 +1,20 @@
 """Every CrawlConfig setting must be read somewhere in the package: a
-field nothing reads is an option that silently does nothing."""
+field nothing reads is an option that silently does nothing. The default
+driver heap fits the host."""
 
 from __future__ import annotations
 
 import ast
 import dataclasses
+import os
+import subprocess
+import sys
 from pathlib import Path
 
-from distributed_crawler_spark.config import CrawlConfig
+from distributed_crawler_spark.config import CrawlConfig, default_driver_memory
 
-PKG = Path(__file__).resolve().parent.parent / "distributed_crawler_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "distributed_crawler_spark"
 
 
 def attributes_read(root: Path, skip: Path) -> set[str]:
@@ -28,3 +33,31 @@ def test_every_crawl_config_field_is_read():
     read = attributes_read(PKG, PKG / "config.py")
     unread = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in read]
     assert unread == [], f"CrawlConfig fields nothing reads: {unread}"
+
+
+def test_default_driver_memory_is_capped_by_host_memory():
+    gib = 1 << 30
+    assert default_driver_memory(15 * gib) == "6144m"
+    assert default_driver_memory(120 * gib) == "49152m"
+    assert default_driver_memory(1024 * gib) == "49152m"
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert default_driver_memory() == default_driver_memory(phys)
+
+
+def _engine_driver_memory(env: dict[str, str]) -> str:
+    # EngineConfig reads the environment at import, so ask a fresh process
+    code = (
+        "from distributed_crawler_spark.config import EngineConfig;"
+        "print(EngineConfig().driver_memory)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env,
+        capture_output=True, text=True, check=True,
+    )
+    return out.stdout.strip()
+
+
+def test_driver_memory_env_override_wins():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+    assert _engine_driver_memory(env) == default_driver_memory()
+    assert _engine_driver_memory({**env, "SPARK_GRAFT_DRIVER_MEM": "5g"}) == "5g"
