@@ -33,8 +33,6 @@ normalization; the end marker is '</w>').
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,7 +50,13 @@ END_MARK = "</w>"
 # tie-break, and str.replace == SQL replace: left-to-right
 # non-overlapping on the same delimited encoding).  Corpora whose
 # vocabulary exceeds the cap keep the distributed loop unchanged.
-COLLECT_WORDS_MAX = int(os.environ.get("SPARK_GRAFT_BPE_COLLECT_MAX", "2000000"))
+COLLECT_WORDS_MAX = 2_000_000
+
+# encode_bpe_stats force-broadcasts the (word, n_syms) segmentation map
+# only up to this many words: a 200k-row hash relation is a few MB on
+# each executor, while one near COLLECT_WORDS_MAX would pin hundreds of
+# MB there.  Larger vocabularies leave the join to the planner.
+BROADCAST_WORDS_MAX = 200_000
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -128,12 +132,12 @@ def _learn_collected(
 
 def _learn(
     docs: DataFrame, merges: int, text_col: str
-) -> tuple[list[tuple], DataFrame, bool]:
+) -> tuple[list[tuple], DataFrame, int | None]:
     """Shared learn loop: returns (merge rows, final (word, freq, seq)
     frame with all merges applied — persisted; caller unpersists,
-    and a flag telling whether the vocabulary is KNOWN driver-small —
-    i.e. the collected fast path ran, so the frame is a LocalRelation
-    of <= COLLECT_WORDS_MAX rows and safe to broadcast-hint).
+    and the number of distinct words when the collected fast path ran
+    — the frame is then a LocalRelation of that many rows — or None
+    when the distributed loop ran and the size is unknown).
     When the distinct-word table fits the driver (COLLECT_WORDS_MAX)
     the merge rounds run driver-side in one collect instead of one
     Spark job per round; the distributed loop below is the fallback
@@ -142,14 +146,13 @@ def _learn(
     wf = word_freqs(docs, text_col).select(
         "word", "freq", _initial_seq().alias("seq")
     )
-    if COLLECT_WORDS_MAX > 0:
-        head = wf.limit(COLLECT_WORDS_MAX + 1).collect()
-        if len(head) <= COLLECT_WORDS_MAX:
-            out, table = _learn_collected(head, merges)
-            final = spark.createDataFrame(
-                table, "word string, freq long, seq string"
-            ).persist()
-            return out, final, True
+    head = wf.limit(COLLECT_WORDS_MAX + 1).collect()
+    if len(head) <= COLLECT_WORDS_MAX:
+        out, table = _learn_collected(head, merges)
+        final = spark.createDataFrame(
+            table, "word string, freq long, seq string"
+        ).persist()
+        return out, final, len(head)
     # the (word, freq, seq) table is small relative to the corpus (one
     # row per DISTINCT word) and is re-read every round
     wf = wf.persist()
@@ -180,7 +183,7 @@ def _learn(
         ).persist()
         wf.unpersist()
         wf = nxt
-    return out, wf, False
+    return out, wf, None
 
 
 def learn_bpe(
@@ -191,7 +194,7 @@ def learn_bpe(
     Ties broken (count DESC, lhs ASC, rhs ASC) so the result is
     deterministic and engine-independent (counts are exact integers)."""
     spark: SparkSession = docs.sparkSession
-    out, wf, _small = _learn(docs, merges, text_col)
+    out, wf, _ = _learn(docs, merges, text_col)
     wf.unpersist()
     return spark.createDataFrame(
         out, "rank long, lhs string, rhs string, merged string, pair_count long"
@@ -217,19 +220,20 @@ def encode_bpe_stats(
     encode) — mirrored by the oracle's inner join.
 
     The map side is explicitly ``F.broadcast`` when the collected learn
-    path ran (vocabulary KNOWN <= COLLECT_WORDS_MAX rows — tens of MB):
-    the segmentation frame is a LocalRelation whose stats Catalyst
-    cannot estimate, and without the hint the planner broadcast the
-    EXPLODED CORPUS word list instead (the parquet scan's pre-explode
-    size estimate looked small) — a driver-serial build of a multi-
-    million-row hash relation, and the exactly wrong side at any real
-    scale.  Larger vocabularies keep the planner's choice."""
-    _, wf, vocab_small = _learn(docs, merges, text_col)
+    path ran and the vocabulary is KNOWN to hold <= BROADCAST_WORDS_MAX
+    words (a few MB per executor): the segmentation frame is then a
+    LocalRelation whose stats Catalyst cannot estimate, and without
+    the hint the planner broadcast the EXPLODED CORPUS word list
+    instead (the parquet scan's pre-explode size estimate looked small)
+    — a driver-serial build of a multi-million-row hash relation, and
+    the exactly wrong side at any real scale.  Larger or unknown-size
+    vocabularies keep the planner's choice."""
+    _, wf, n_words = _learn(docs, merges, text_col)
     n_syms = F.size(
         F.filter(F.split("seq", r"\|\|"), lambda x: x != "")
     ).cast("long")
     seg = wf.select("word", n_syms.alias("n_syms"))
-    if vocab_small:
+    if n_words is not None and n_words <= BROADCAST_WORDS_MAX:
         seg = F.broadcast(seg)
     norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", " ")
     doc_words = (
@@ -250,86 +254,3 @@ def encode_bpe_stats(
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
-
-
-def unigram_viterbi_stats(
-    docs: DataFrame,
-    vocab: dict[str, int],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_word_len: int = 16,
-) -> DataFrame:
-    """Unigram-LM tokenization (Kudo 2018 — the SentencePiece unigram
-    model, THE other production tokenizer family beside BPE): segment
-    every word into vocabulary pieces by VITERBI dynamic programming
-    minimizing total piece cost (integer-scaled -log p), tie-broken to
-    the fewest pieces.  Output per doc: token count, total segmentation
-    cost, total piece count — the corpus-level statistics a tokenizer
-    is judged by (pieces/word = compression; cost = LM fit).
-
-    The DP runs NATIVELY inside Catalyst — no UDF, no Python: per
-    distinct word, ``aggregate(sequence(1, len), [0], ...)`` builds the
-    dp array left to right, each step an ``array_min`` over the last
-    max_piece_len starts with an O(1) map-literal piece-cost lookup
-    (``element_at(map, substr)``).  Cost and piece count ride in ONE
-    long (combined = cost*64 + pieces, exact while pieces < 64 — words
-    are capped at max_word_len tokens' pieces), so min() is the
-    lexicographic (cost, pieces) argmin and every step is integer
-    arithmetic — bit-exact across engines; the oracle unrolls the same
-    DP as CTE steps.
-
-    Scale shape: the DP runs once per DISTINCT word (Zipf's law: far
-    fewer than occurrences); one hash join maps occurrences to their
-    word's stats, one per-doc aggregate.  Words longer than
-    max_word_len are excluded on BOTH engines (the oracle's unroll
-    depth); single-character vocab entries guarantee feasibility."""
-    max_piece = max(len(k) for k in vocab)
-    inf = 1 << 55
-    entries: list = []
-    for k in sorted(vocab):
-        entries += [F.lit(k), F.lit(int(vocab[k]) * 64 + 1).cast("long")]
-    vm = F.create_map(*entries)
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("word"),
-    ).filter((F.col("word") != "") & (F.length("word") <= max_word_len))
-    words = toks.select("word").distinct()
-
-    word_col = F.col("word")
-    dp = F.aggregate(
-        F.sequence(F.lit(1), F.length(word_col)),
-        F.array(F.lit(0).cast("long")),
-        lambda acc, i: F.concat(
-            acc,
-            F.array(
-                F.array_min(
-                    F.transform(
-                        F.sequence(F.greatest(F.lit(1), i - max_piece + 1), i),
-                        lambda j: F.element_at(acc, j.cast("int"))
-                        + F.coalesce(
-                            F.element_at(vm, word_col.substr(j, i - j + 1)),
-                            F.lit(inf).cast("long"),
-                        ),
-                    )
-                )
-            ),
-        ),
-    )
-    seg = words.withColumn(
-        "__c", F.element_at(dp, (F.length(word_col) + 1).cast("int"))
-    ).select(
-        "word",
-        F.expr("__c DIV 64").alias("w_cost"),
-        F.pmod(F.col("__c"), F.lit(64)).cast("long").alias("w_pieces"),
-    )
-    return (
-        toks.join(seg, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("w_cost").cast("long").alias("total_cost"),
-            F.sum("w_pieces").cast("long").alias("total_pieces"),
-        )
-        .orderBy("doc_id")
-    )

@@ -20,8 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +28,11 @@ from ..functions.hashing import phash
 # ngram_jaccard_pairs(hot_df=HOT_DF_DISABLED): the caller asserts no
 # shingle can be hot (a bounded slice), so the hot-key probe is skipped
 HOT_DF_DISABLED = 1 << 30
+
+# ngram_jaccard_pairs collects the hot-dominated doc ids to the driver;
+# collect contract: at most this many + 1 rows, above which the operator
+# takes the plain exact join instead
+HOT_DOMINATED_MAX = 5000
 
 
 def token_array(text_col):
@@ -274,10 +277,9 @@ def ngram_jaccard_pairs(
     here; navigation chrome at web scale) serialize the whole job on a
     few tasks and bloat the pair aggregate with millions of pairs that
     share nothing else. Shingles with document frequency ≥ ``hot_df``
-    (default derived from the session parallelism; env override
-    SPARK_GRAFT_HOT_SHINGLE_DF) are therefore EXCLUDED from the
-    inverted-index join and their contribution is reconstructed
-    EXACTLY:
+    (default max(256, 8 × session parallelism)) are therefore EXCLUDED
+    from the inverted-index join and their contribution is
+    reconstructed EXACTLY:
 
       * cold-pair counts n_cold come from the normal join (per-key work
         now bounded by hot_df^2);
@@ -302,9 +304,7 @@ def ngram_jaccard_pairs(
     dp = spark.sparkContext.defaultParallelism
     n_part = dp * 8
     if hot_df is None:
-        hot_df = int(os.environ.get("SPARK_GRAFT_HOT_SHINGLE_DF", "0")) or max(
-            256, 8 * dp
-        )
+        hot_df = max(256, 8 * dp)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     if hot_df >= HOT_DF_DISABLED:
         # caller-asserted "no hot shingles possible" (bounded slices):
@@ -325,6 +325,7 @@ def ngram_jaccard_pairs(
         .select("k1", "k2")
         .localCheckpoint(eager=True)
     )
+    # collect contract: one row, an existence probe
     hk = hot_keys.limit(1).collect()
     if not hk:
         # common case: no hot shingles — exactly the plain exact join
@@ -359,8 +360,8 @@ def ngram_jaccard_pairs(
         .filter(F.col("h") * (1.0 + t_eff) >= t_eff * F.col("sz"))
         .select(id_col)
     )
-    hd_ids = [r[0] for r in hd.limit(5001).collect()]
-    if len(hd_ids) > 5000:
+    hd_ids = [r[0] for r in hd.limit(HOT_DOMINATED_MAX + 1).collect()]
+    if len(hd_ids) > HOT_DOMINATED_MAX:
         # degenerate corpus (most docs mostly boilerplate): plain path
         cand = _pair_counts_join(sh, id_col, n_part)
         return _jaccard_filter(cand, sizes, id_col, threshold)
@@ -941,96 +942,3 @@ def remove_dup_paragraphs(
         )
     )
     return rebuilt
-
-
-def cdc_chunk_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 8,
-    base: int = 31,
-    modulus: int = 1 << 20,
-    divisor: int = 64,
-) -> DataFrame:
-    """Content-defined chunking (Rabin-style rolling hash — the
-    LBFS/rsync/venti lineage) plus cross-document chunk dedup stats:
-    a chunk boundary is cut after position i when a hash of the last
-    ``window`` characters satisfies H % divisor == 0, so boundaries
-    RESYNCHRONIZE after insertions — two near-identical documents share
-    most chunks even when every fixed-size block would shift (the
-    property that makes CDC the storage dedup for WARC archives and
-    snapshot stores; pytest demonstrates it with a 1-char prefix edit).
-
-    The hash is POSITIONAL, not sequential: H(i) = sum_{j<window}
-    code(c[i-j]) * base^j (mod modulus) depends only on the window
-    ending at i, so every position computes independently — one
-    whole-stage-codegen'd filter() over the char-code array, no scan
-    dependency, no UDF, and the identical arithmetic runs as the staged
-    DuckDB oracle.  Expected chunk length is ``divisor`` characters.
-
-    Output per non-empty doc: (doc_id, n_chunks, n_shared,
-    shared_chars) — n_shared counts this doc's chunk OCCURRENCES whose
-    content also appears in at least one OTHER doc; shared_chars sums
-    their lengths (the bytes a chunk store would not write twice).
-
-    Scale shape: chunking is a pure map; the dedup stat is ONE hash
-    shuffle keyed by chunk content with map-side combine, then one
-    join back on doc id.  (At petabyte scale key the shuffle by
-    xxhash64(chunk) instead of the raw string; kept raw here so the
-    oracle joins on identical keys.)"""
-    pows = ", ".join(str(pow(base, j, modulus)) for j in range(window))
-    sel = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("__t"),
-    ).filter(F.length("__t") > 0)
-    sel = sel.withColumn(
-        "__codes", F.expr("transform(split(__t, ''), c -> CAST(ascii(c) AS BIGINT))")
-    )
-    sel = sel.withColumn(
-        "__cuts",
-        F.expr(
-            f"""filter(sequence({window}, greatest(length(__t), {window})),
-              i -> i < length(__t) AND
-                   aggregate(sequence(0, {window - 1}),
-                             CAST(0 AS BIGINT),
-                             (acc, j) -> acc + element_at(__codes, i - j)
-                                             * element_at(array({pows}), j + 1)
-                   ) % {modulus} % {divisor} = 0)"""
-        ),
-    )
-    chunks = sel.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                """zip_with(concat(array(0), __cuts),
-                            concat(__cuts, array(length(__t))),
-                            (s, e) -> substring(__t, s + 1, e - s))"""
-            )
-        ).alias("chunk"),
-    )
-    # the distinct-doc count is only ever thresholded at 2, and
-    # "appears in >= 2 distinct docs" ⟺ min(doc) != max(doc) over the
-    # raw occurrences — a map-side-combinable min/max pair instead of
-    # the two-exchange countDistinct rewrite
-    freq = (
-        chunks.groupBy("chunk")
-        .agg(F.min("doc_id").alias("__mn"), F.max("doc_id").alias("__mx"))
-        .select(
-            "chunk", (F.col("__mn") != F.col("__mx")).alias("__shared")
-        )
-    )
-    return (
-        chunks.join(freq, "chunk")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum(F.when(F.col("__shared"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_shared"),
-            F.sum(
-                F.when(F.col("__shared"), F.length("chunk")).otherwise(0)
-            )
-            .cast("long")
-            .alias("shared_chars"),
-        )
-    )

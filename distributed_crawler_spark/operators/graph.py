@@ -29,8 +29,6 @@ CTE — intermediate states never surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,7 +42,7 @@ from ..functions.hashing import phash
 # labels are unique, so both paths return identical assignments; the
 # distributed fixpoint remains the path for graphs over the cap
 # (parity-tested both ways).
-COLLECT_EDGES_MAX = int(os.environ.get("SPARK_GRAFT_CC_COLLECT_MAX", "2000000"))
+COLLECT_EDGES_MAX = 2_000_000
 
 
 def _components_collected(rows) -> dict[int, int]:
@@ -283,80 +281,6 @@ def pagerank_int(
             )
         )
     return scores
-
-
-def trustrank_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 5,
-    scale: int = 1_000_000,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    node_col: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-) -> DataFrame:
-    """Integer-arithmetic TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
-    VLDB 2004): PageRank with the teleport mass confined to a TRUSTED
-    seed set — trust flows out from hand-vetted hosts, so spam farms
-    that manufacture rank among themselves score near zero.  The
-    standard web-spam demotion signal; the reference's crawler treats
-    every discovered URL identically.
-
-    Same bit-exactness contract and per-iteration shape as pagerank_int
-    (one join + one map-side-combined sum + one left join; shuffles
-    carry (id, long) pairs), with two changes: the initial score and
-    the per-round base term are ``(scale*(den-num)) DIV den`` for seed
-    nodes and 0 for everything else (the uniform-over-seeds teleport,
-    up to the global 1/|S| normalization which cancels in ranking and
-    is kept OUT to stay in exact integers).  ``seeds`` is one column of
-    node ids; it is broadcast-joined (seed sets are tiny by
-    definition).  Weighted edges behave exactly as in pagerank_int."""
-    # same persist rationale as pagerank_int: both frames are read once
-    # per iteration inside a single final action
-    e = edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
-        (F.col(weight) if weight else F.lit(1)).cast("long").alias("w"),
-    ).persist()
-    odeg = e.groupBy("src").agg(F.sum("w").alias("od")).persist()
-    base = (scale * (damp_den - damp_num)) // damp_den
-    seed_col = seeds.columns[0]
-    sd = seeds.select(
-        F.col(seed_col).cast("long").alias("node"),
-        F.lit(True).alias("__seed"),
-    ).distinct()
-    ns = nodes.select(F.col(node_col).cast("long").alias("node")).join(
-        F.broadcast(sd), "node", "left"
-    )
-    base_expr = F.when(F.col("__seed"), F.lit(base)).otherwise(F.lit(0)).cast("long")
-    scores = ns.select(
-        "node",
-        "__seed",
-        F.when(F.col("__seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("score"),
-    )
-    for _ in range(iters):
-        contrib = (
-            e.join(scores.select("node", "score"), F.col("src") == F.col("node"))
-            .join(odeg, "src")
-            .select("dst", F.expr("(score * w) DIV od").alias("c"))
-        )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("inc"))
-        scores = (
-            scores.select("node", "__seed")
-            .join(incoming, F.col("node") == F.col("dst"), "left")
-            .select(
-                "node",
-                "__seed",
-                (
-                    base_expr
-                    + F.expr(f"({damp_num} * coalesce(inc, 0L)) DIV {damp_den}")
-                ).alias("score"),
-            )
-        )
-    return scores.select("node", "score")
 
 
 def dedup_clusters(
@@ -623,142 +547,4 @@ def resolve_chains(
         F.when(F.col("t_id").isNull(), F.col("ptr")).alias("final_id"),
         F.when(F.col("t_id").isNull(), F.col("hops")).alias("hops"),
         F.col("t_id").isNull().alias("resolved"),
-    )
-
-
-def host_link_features(
-    edges: DataFrame,
-    src_host_col: str = "src_host",
-    dst_host_col: str = "dst_host",
-) -> DataFrame:
-    """Per-host web-graph features — the domain-level link-spam /
-    quality signals (RefinedWeb-style domain gating, TrustRank-adjacent
-    heuristics) the reference never derives: for every host seen as a
-    link source or target,
-
-      out_edges / in_edges     page-level edge counts by direction
-      out_hosts / in_hosts     DISTINCT counterparty hosts
-      self_frac                fraction of out-edges staying on-host
-                               (navigation-heavy vs outward-linking)
-      recip_frac               fraction of distinct out-neighbors that
-                               link back (link-exchange rings sit near
-                               1.0; organic hosts much lower)
-
-    Scale shape: ONE page-scale shuffle contracts the 10^10-edge page
-    graph to weighted (src_host, dst_host, w) edges (map-side combined);
-    every feature after that — the two per-direction aggregates and the
-    reciprocity self-join — runs on the contracted host graph (~10^7
-    rows), the host_pagerank contraction argument applied to feature
-    extraction."""
-    hg = (
-        edges.groupBy(
-            F.col(src_host_col).alias("src"), F.col(dst_host_col).alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    inter = hg.filter(F.col("src") != F.col("dst"))
-    # reciprocity over DISTINCT inter-host neighbor pairs
-    back = inter.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = (
-        inter.select("src", "dst")
-        .join(back.select("src", "dst").distinct(), ["src", "dst"], "left_semi")
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("n_recip"))
-    )
-    outs = hg.groupBy("src").agg(
-        F.sum("w").alias("out_edges"),
-        F.sum(F.when(F.col("src") == F.col("dst"), F.col("w")).otherwise(0)).alias(
-            "self_edges"
-        ),
-        F.count(F.when(F.col("src") != F.col("dst"), 1)).alias("out_hosts"),
-    )
-    ins = hg.filter(F.col("src") != F.col("dst")).groupBy(
-        F.col("dst").alias("host")
-    ).agg(
-        F.sum("w").alias("in_edges"),
-        F.count(F.lit(1)).alias("in_hosts"),
-    )
-    feats = (
-        outs.withColumnRenamed("src", "host")
-        .join(ins, "host", "full_outer")
-        .join(recip.withColumnRenamed("src", "host"), "host", "left")
-    )
-    z = lambda c: F.coalesce(F.col(c), F.lit(0)).cast("long")
-    return feats.select(
-        "host",
-        z("out_edges").alias("out_edges"),
-        z("in_edges").alias("in_edges"),
-        z("out_hosts").alias("out_hosts"),
-        z("in_hosts").alias("in_hosts"),
-        F.when(
-            z("out_edges") > 0,
-            F.round(z("self_edges") / z("out_edges"), 4),
-        ).otherwise(F.lit(0.0)).alias("self_frac"),
-        F.when(
-            z("out_hosts") > 0,
-            F.round(z("n_recip") / z("out_hosts"), 4),
-        ).otherwise(F.lit(0.0)).alias("recip_frac"),
-    )
-
-
-def related_hosts(
-    edges: DataFrame,
-    topk: int = 3,
-    max_out: int = 8,
-    src_host_col: str = "src_host",
-    dst_host_col: str = "dst_host",
-) -> DataFrame:
-    """Related-hosts by CO-CITATION (Dean & Henzinger WWW'99 "related
-    pages", contracted to hosts): two hosts are related when many
-    sources link to BOTH — the "similar sites" signal that needs no
-    content at all, only the link graph; complements content-side
-    similarity (minhash/SemDeDup) with a pure-graph view.
-
-    Scale discipline: raw co-citation is quadratic in source
-    out-degree (a source linking d hosts certifies d^2 pairs), so each
-    source's neighbor list is first CAPPED to its ``max_out`` strongest
-    edges (by link count, tie dst asc — row_number over a per-source
-    window, deterministic), the standard production cap that bounds
-    the pair explosion at #sources * max_out^2 regardless of hub size.
-    After the cap: one self-join on the source key, one (a, b) count
-    aggregate, one per-host top-k window — all hash-partitioned on
-    host-sized keys.
-
-    Output: (host, related, cocitations, rank) — topk related hosts
-    per host by common-source count (ties: smaller host name first)."""
-    from pyspark.sql import Window
-
-    hg = (
-        edges.groupBy(
-            F.col(src_host_col).alias("src"), F.col(dst_host_col).alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    w_cap = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
-    capped = (
-        hg.withColumn("__r", F.row_number().over(w_cap))
-        .filter(F.col("__r") <= max_out)
-        .select("src", "dst")
-    )
-    pairs = (
-        capped.alias("x")
-        .join(capped.alias("y"), "src")
-        .select(F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    cocite = pairs.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("cocitations")
-    )
-    w_top = Window.partitionBy("a").orderBy(F.col("cocitations").desc(), "b")
-    return (
-        cocite.withColumn("rank", F.row_number().over(w_top))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("a").alias("host"),
-            F.col("b").alias("related"),
-            "cocitations",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("host", "rank")
     )

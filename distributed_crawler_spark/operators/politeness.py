@@ -257,6 +257,7 @@ def blocklist_filter(
     # single-label entries and entries longer than the cap). The list is
     # broadcast-small by contract, so the 1-row min/max action is free;
     # an empty list keeps the default range (no probe can match anyway).
+    # Collect contract: one global-aggregate row.
     span = blocked_domains.select(
         F.size(F.split(F.col(blocked_domains.columns[0]), r"\.")).alias("n")
     ).agg(F.min("n").alias("lo"), F.max("n").alias("hi")).collect()[0]

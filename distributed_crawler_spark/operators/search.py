@@ -826,94 +826,3 @@ def bm25_from_index(
         .agg(F.round(F.sum("term_score"), SCORE_DECIMALS).alias("score"))
     )
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(topk)
-
-
-def postings_gamma_size(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    topk: int = 50,
-) -> DataFrame:
-    """Index capacity planning: per-term Elias-gamma compressed size of
-    the doc-id postings list (Witten/Moffat/Bell "Managing Gigabytes"
-    gap encoding — the arithmetic every IR engine's size estimator
-    runs): sort each term's doc ids, delta-encode (first gap doc_id+1
-    so id 0 stays positive), cost each gap 2*floor(log2 g)+1 bits.
-    Returns the topk largest terms by total bits — the terms that
-    dominate index growth and the first candidates for stopword or
-    impact-ordering treatment when sizing a sharded index.
-
-    Exact integer arithmetic via bit length (length(bin(g)) — no
-    float log2, so engine-portable); one shuffle to postings, one
-    term-partitioned window for the gaps (parallel across terms), one
-    aggregate."""
-    from pyspark.sql import Window
-
-    p = build_postings(docs, id_col, text_col).select(
-        F.col("term"), F.col(id_col).alias("doc_id")
-    )
-    w = Window.partitionBy("term").orderBy("doc_id")
-    g = p.withColumn(
-        "gap",
-        F.coalesce(
-            F.col("doc_id") - F.lag("doc_id").over(w), F.col("doc_id") + 1
-        ),
-    )
-    bits = 2 * F.length(F.bin(F.col("gap"))) - 1
-    return (
-        g.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum(bits).cast("long").alias("gamma_bits"),
-        )
-        .withColumn(
-            "bits_per_posting",
-            F.round(F.col("gamma_bits") / F.col("df"), 4),
-        )
-        .orderBy(F.col("gamma_bits").desc(), "term")
-        .limit(topk)
-    )
-
-
-def percolate(
-    docs: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-) -> DataFrame:
-    """PERCOLATION — reverse search (Elasticsearch percolator /
-    saved-search alerting): match a table of STORED conjunctive term
-    queries against a document stream and emit every (query, doc) hit.
-    The crawl-pipeline use: standing alerts ("tell me when a crawled
-    page mentions all of X Y Z") evaluated per batch without
-    re-running ad-hoc searches.
-
-    Plan shape: explode each query's term list once (queries are tiny
-    relative to the corpus — broadcast), explode doc tokens to DISTINCT
-    (doc, term) postings, broadcast-join, then ONE count aggregate per
-    (query, doc) checking every required term matched (AND semantics).
-    The corpus-sized postings frame shuffles once, keyed (query, doc);
-    no per-query scan, no UDF."""
-    qt = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(terms_col).alias("term"),
-    ).distinct()
-    nterms = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("__need"))
-    postings = (
-        tokenize(docs.select(id_col, text_col), text_col)
-        .select(F.col(id_col).alias("doc_id"), F.col("token").alias("term"))
-        .distinct()
-    )
-    hits = (
-        postings.join(F.broadcast(qt), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("__got"))
-    )
-    return (
-        hits.join(F.broadcast(nterms), "query_id")
-        .filter(F.col("__got") == F.col("__need"))
-        .select("query_id", "doc_id")
-        .orderBy("query_id", "doc_id")
-    )

@@ -318,107 +318,3 @@ def dust_rule_mining(
             F.lit(False),
         ).alias("valid"),
     )
-
-
-def exact_quantiles(
-    df: DataFrame,
-    value_col: str,
-    tie_col: str,
-    permilles: list[int] | None = None,
-) -> DataFrame:
-    """EXACT global quantiles (no approxQuantile epsilon): the permille-p
-    quantile is the element at rank ceil(p * n / 1000) in the total
-    order (value, tie) — integer rank arithmetic so both engines select
-    the identical row, and the output is an EXISTING element (pure
-    selection, no interpolation float math).
-
-    The monitoring query approxQuantile can't serve when the SLO is
-    exact (p99 fetch latency for a politeness contract): one
-    global_row_number over the range-partition + broadcast-offset shape
-    (never a single-partition sort), one count action, then a
-    broadcast-joined rank lookup.  Cost: one range shuffle of (value,
-    tie) pairs — same class as any global sort, but no full-sort
-    output materialization."""
-    from .suffix import global_row_number
-
-    permilles = permilles or [500, 900, 950, 990]
-    ranked = global_row_number(
-        df.select(F.col(value_col).alias("v"), F.col(tie_col).alias("t")),
-        ["v", "t"],
-        "rn",
-    )
-    n = ranked.count()
-    spark = df.sparkSession
-    targets = spark.createDataFrame(
-        [(p, max(1, (p * n + 999) // 1000)) for p in permilles],
-        "permille INT, rn LONG",
-    )
-    return (
-        ranked.join(F.broadcast(targets), "rn")
-        .select("permille", F.col("v").alias(value_col))
-        .orderBy("permille")
-    )
-
-
-def heavy_hitters(
-    df: DataFrame,
-    col: str,
-    k: int = 20,
-    value_type: str = "LONG",
-) -> DataFrame:
-    """EXACT phi-heavy-hitters: every value occurring more than n/k
-    times, with its exact count — two passes:
-
-    1. Misra-Gries / Frequent candidate sweep, one mapInPandas over the
-       value column with k counters per partition: per Arrow batch, add
-       value_counts, and while more than k counters live subtract the
-       (k+1)-th largest count from all (at least k+1 counters lose that
-       full amount, so total decrement <= partition_mass/(k+1) — the
-       classic bound).  Any value with partition count > n_p/(k+1)
-       survives; a global heavy hitter (> n/k) exceeds n_p/k in at
-       least one partition by pigeonhole, so the union of partition
-       survivors is a GUARANTEED superset.  The candidate set handed to
-       phase 2 is bounded by #partitions * k; WITHIN a partition the
-       counter dict transiently grows to one Arrow batch's distinct
-       values between per-batch decrements (the decrement subtracts the
-       (k+1)-th largest count, leaving <= k survivors) — the practical
-       memory bound is k + maxRecordsPerBatch, not k (ADVICE r06).
-       Candidates remain broadcastable by construction.
-    2. Exact verification: broadcast-semi-join the corpus to the
-       candidates, one map-side-combined count, keep count * k > n.
-
-    The approximation lives only in the bounded-memory candidate pass;
-    the OUTPUT is exact and deterministic (ties: both 'just at' n/k are
-    excluded — strict >)."""
-    import pandas as pd  # noqa: F401 (mapInPandas contract)
-
-    n = df.count()
-    vals = df.select(F.col(col).alias("v"))
-
-    def mg(batches):
-        counters: dict = {}
-        for pdf in batches:
-            for v, c in pdf["v"].value_counts().items():
-                counters[v] = counters.get(v, 0) + int(c)
-            if len(counters) > k:
-                import heapq
-
-                dec = heapq.nlargest(k + 1, counters.values())[k]
-                counters = {
-                    v: c - dec for v, c in counters.items() if c - dec > 0
-                }
-        import pandas as _pd
-
-        yield _pd.DataFrame({"v": list(counters.keys())})
-
-    cands = vals.mapInPandas(mg, schema=f"v {value_type}").distinct()
-    exact = (
-        vals.join(F.broadcast(cands), "v", "left_semi")
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return (
-        exact.filter(F.col("cnt") * k > F.lit(n))
-        .select(F.col("v").alias(col), "cnt")
-        .orderBy(F.col("cnt").desc(), col)
-    )

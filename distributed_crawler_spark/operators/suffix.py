@@ -271,7 +271,7 @@ def exact_substr_dups(
     tokens, (doc_id, n_dup_starts, max_dup_len) — the number of token
     positions starting such a span and the longest duplicated prefix
     length among them.  See the module docstring for the run/island
-    semantics (exactly mirrored by the staged DuckDB oracle).
+    semantics.
 
     Scale shape after the suffix array: the strong-edge frame (adjacent
     LCP >= min_len) is OUTPUT-bounded — proportional to duplicated
@@ -297,8 +297,7 @@ def _dup_member_spans(
     partitions: int,
 ) -> DataFrame:
     """Internal: (doc_id, pos, dup_len) for every suffix in a CROSS-DOC
-    duplicate island — the shared middle of exact_substr_dups and
-    remove_exact_spans (identical semantics, per-position output)."""
+    duplicate island — the per-position middle of exact_substr_dups."""
     sa = suffix_array(docs, id_col, text_col, partitions).localCheckpoint(
         eager=True
     )
@@ -338,69 +337,3 @@ def _dup_member_spans(
         .select("island")
     )
     return withdoc.join(xdoc, "island").select("doc_id", "pos", "dup_len")
-
-
-def remove_exact_spans(
-    docs: DataFrame,
-    min_len: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    partitions: int = 32,
-) -> DataFrame:
-    """The ACTION for exact_substr_dups — Lee et al. 2022's ExactSubstr
-    removal, exactly: delete from every document each token span that
-    starts a >= min_len-token cross-document duplicate (span = [pos,
-    pos + dup_len), overlaps unioned), and rebuild the residual text in
-    original token order.  The exact counterpart of
-    dedup.remove_dup_spans (which fingerprint-samples the same
-    contract probabilistically).
-
-    Output: every input doc as (doc_id, n_tokens, n_removed,
-    text_dedup) — docs without duplicated spans pass through with
-    n_removed = 0; a fully-covered doc comes back with empty
-    text_dedup (the caller's length filter drops it, same convention
-    as remove_dup_spans).
-
-    Scale shape: duplicated-position spans are OUTPUT-bounded; the
-    coverage explode produces at most one row per COVERED token (never
-    more than corpus tokens, and only for docs that contain
-    duplicates); the rebuild is one anti-join from the exploded token
-    table against covered positions, then one per-doc ordered
-    aggregation — shuffles keyed by (doc_id) / (doc_id, pos) only."""
-    spans = _dup_member_spans(docs, min_len, id_col, text_col, partitions)
-    covered = spans.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + F.col("dup_len") - 1)
-        ).alias("pos"),
-    ).distinct()
-    toks = _tokens(docs, id_col, text_col)
-    exploded = toks.select(
-        "doc_id", F.posexplode("toks").alias("p0", "tok")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
-    kept = exploded.join(covered, ["doc_id", "pos"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("tok")))
-                ),
-                lambda s: s["tok"],
-            ),
-        ).alias("text_dedup"),
-        F.count(F.lit(1)).cast("long").alias("__n_kept"),
-    )
-    base = toks.select("doc_id", F.size("toks").cast("long").alias("n_tokens"))
-    return (
-        base.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("n_tokens") - F.coalesce(F.col("__n_kept"), F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-            F.coalesce(F.col("text_dedup"), F.lit("")).alias("text_dedup"),
-        )
-        .orderBy("doc_id")
-    )

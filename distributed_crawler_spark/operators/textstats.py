@@ -107,67 +107,6 @@ def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-DEFAULT_SCRIPTS: dict[str, str] = {
-    # name -> alphabet (every char of the script the profiler counts);
-    # tiny alphabets here because the synthetic corpus maps vowels — a
-    # production profile would carry the full Unicode block strings.
-    "latin": "abcdefghijklmnopqrstuvwxyz",
-    "greek": "αεηιυ",
-    "cyrillic": "аеиоу",
-    "cjk": "おた",
-}
-
-
-def script_profile(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scripts: dict[str, str] | None = None,
-) -> DataFrame:
-    """Per-document writing-script histogram + dominant script — the
-    script prior every production language identifier applies before
-    its n-gram model (CLD3's first stage; fasttext-lid's script
-    buckets): a page that is 90% Cyrillic codepoints is not English no
-    matter what its trigrams say.  The reference pipeline has no
-    language handling at all; [[language_id]]'s marker words only work
-    WITHIN a script, so this is its upstream gate.
-
-    Counting is translate()-based — ``length(t) - length(translate(t,
-    alphabet, ''))`` counts characters of each script in one
-    whole-stage-codegen'd expression, no explode, no UDF, no regex
-    engine; a doc costs O(len * n_scripts) JVM char scans and the
-    operator is a pure map (zero shuffles).  Dominant script is the
-    max-count argmax with deterministic tie-break on script name (the
-    array_max-on-struct idiom, see language_id); confidence is the
-    dominant share of all SCRIPT characters (spacing/digits excluded
-    from the denominator).  Empty / script-free docs yield 'none'."""
-    scripts = dict(sorted((scripts or DEFAULT_SCRIPTS).items()))
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    counts = {
-        name: (F.length(t) - F.length(F.translate(t, alpha, ""))).cast("long")
-        for name, alpha in scripts.items()
-    }
-    total = None
-    for c in counts.values():
-        total = c if total is None else total + c
-    best = F.array_max(
-        F.array(
-            *[
-                F.struct(c.alias("n"), F.lit(name).alias("script"))
-                for name, c in counts.items()
-            ]
-        )
-    )
-    return docs.select(
-        F.col(id_col),
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-        F.when(best["n"] > 0, best["script"]).otherwise(F.lit("none")).alias("script"),
-        F.when(
-            total > 0, F.round(best["n"] / total, 4)
-        ).otherwise(F.lit(0.0)).alias("confidence"),
-    )
-
-
 def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Heuristic quality features + composite score:
     length, mean word length, stopword ratio, punctuation ratio,

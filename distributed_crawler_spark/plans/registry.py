@@ -2668,6 +2668,19 @@ def q_ann_ivf_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_search(others, assigned, centroids, qvec, n_probe=4, k=10)
 
 
+def _fixed_centroids(emb: DataFrame) -> list[list[float]]:
+    """The fixed 16-vector IVF codebook: embeddings 1..16 in vec_id
+    order, the offline-trained quantizer case.  Collect contract: the
+    vec_id range bounds the driver collect at 16 rows."""
+    crows = {
+        r["vec_id"]: r["embedding"]
+        for r in emb.filter(
+            (F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)
+        ).collect()
+    }
+    return [[float(x) for x in crows[i]] for i in range(1, 17)]
+
+
 @q(
     "ann_ivf_topk_fixed",
     """
@@ -2710,13 +2723,7 @@ def q_ann_ivf_topk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (iterative, rows-only check) every stage here — assignment tie-break
     included — is mirrored exactly by the DuckDB oracle."""
     emb = _read(spark, sf_dir, "embeddings")
-    crows = {
-        r["vec_id"]: r["embedding"]
-        for r in emb.filter(
-            (F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)
-        ).collect()
-    }
-    centroids = [[float(x) for x in crows[i]] for i in range(1, 17)]
+    centroids = _fixed_centroids(emb)
     qvec = [
         float(x)
         for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]
@@ -4020,13 +4027,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_duplicates' min-keeper). Every stage — argmax tie-break, the
     plane-count formula, the keeper rule — is mirrored by the oracle."""
     emb = _read(spark, sf_dir, "embeddings")
-    crows = {
-        r["vec_id"]: r["embedding"]
-        for r in emb.filter(
-            (F.col("vec_id") >= 1) & (F.col("vec_id") <= 16)
-        ).collect()
-    }
-    centroids = [[float(x) for x in crows[i]] for i in range(1, 17)]
+    centroids = _fixed_centroids(emb)
     return similarity.semantic_dedup_removed(emb, centroids, threshold=0.35)
 
 

@@ -102,13 +102,15 @@ def test_exhausted_corpus_stops_early(spark):
     assert len(got) == 1 and got[0][1:] == ("a", END_MARK, "a" + END_MARK, 1)
 
 
-def test_encode_stats_match_python_reference(spark):
+def test_encode_stats_match_python_reference(spark, monkeypatch):
     """Per-doc whitespace vs BPE token counts equal a reference that
     re-learns the merges and re-segments each doc independently; BPE
     count is bounded by [ws count, chars + ws] and monotone non-
-    increasing in merges applied."""
+    increasing in merges applied.  Checked with the segmentation map
+    force-broadcast and, with the cap at 0, left to the planner."""
     import os
 
+    from distributed_crawler_spark.operators import bpe
     from distributed_crawler_spark.operators.bpe import encode_bpe_stats
 
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
@@ -135,10 +137,12 @@ def test_encode_stats_match_python_reference(spark):
         words = re.sub(r"[^a-z0-9 ]", " ", r["text"].lower()).split()
         if words:
             want[r["doc_id"]] = (len(words), sum(seg_len(w) for w in words))
-    got = {
-        r["doc_id"]: (r["n_tokens_ws"], r["n_tokens_bpe"])
-        for r in encode_bpe_stats(docs, merges=6).collect()
-    }
-    assert got == want
-    for ws, bpe in got.values():
-        assert ws <= bpe  # every word is >= 1 symbol, incl. </w>
+    for cap in (bpe.BROADCAST_WORDS_MAX, 0):
+        monkeypatch.setattr(bpe, "BROADCAST_WORDS_MAX", cap)
+        got = {
+            r["doc_id"]: (r["n_tokens_ws"], r["n_tokens_bpe"])
+            for r in encode_bpe_stats(docs, merges=6).collect()
+        }
+        assert got == want, cap
+    for ws, n_bpe in got.values():
+        assert ws <= n_bpe  # every word is >= 1 symbol, incl. </w>

@@ -1,5 +1,6 @@
 """Every CrawlConfig setting must be read somewhere in the package: a
-field nothing reads is an option that silently does nothing. The default
+field nothing reads is an option that silently does nothing. The
+package's environment knobs are all read in config.py. The default
 driver heap fits the host."""
 
 from __future__ import annotations
@@ -33,6 +34,44 @@ def test_every_crawl_config_field_is_read():
     read = attributes_read(PKG, PKG / "config.py")
     unread = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in read]
     assert unread == [], f"CrawlConfig fields nothing reads: {unread}"
+
+
+def _is_environ(node: ast.expr) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+        isinstance(node, ast.Name) and node.id == "environ"
+    )
+
+
+def environ_keys_read(path: Path) -> set[str]:
+    """Constant keys read from the environment in ``path``:
+    ``os.environ[k]``, ``os.environ.get(k)`` / ``.pop`` / ``.setdefault``
+    and ``os.getenv(k)``."""
+    keys = set()
+    for n in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        key = None
+        if isinstance(n, ast.Subscript) and isinstance(n.ctx, ast.Load):
+            if _is_environ(n.value):
+                key = n.slice
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.args:
+            f = n.func
+            if f.attr == "getenv" or (
+                f.attr in ("get", "pop", "setdefault") and _is_environ(f.value)
+            ):
+                key = n.args[0]
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            keys.add(key.value)
+    return keys
+
+
+def test_spark_graft_env_knobs_are_read_only_in_config():
+    stray = sorted(
+        f"{path.relative_to(PKG)}: {key}"
+        for path in PKG.rglob("*.py")
+        if path != PKG / "config.py"
+        for key in environ_keys_read(path)
+        if key.startswith("SPARK_GRAFT_")
+    )
+    assert stray == [], f"SPARK_GRAFT_* knobs read outside config.py: {stray}"
 
 
 def test_default_driver_memory_is_capped_by_host_memory():

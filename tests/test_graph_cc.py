@@ -220,54 +220,3 @@ def test_keep_one_from_materialized_clusters_equivalent(spark):
         for r in keep_one_from_clusters(docs, dedup_clusters(pairs)).collect()
     )
     assert a == b and 2 not in a and 3 not in a and 11 not in a
-
-
-def test_host_link_features_python_parity(spark):
-    """host_link_features vs a pure-python reference over a seeded random
-    host multigraph (self-loops, reciprocal pairs, one-way edges,
-    sink-only hosts)."""
-    import random
-    from collections import defaultdict
-
-    from distributed_crawler_spark.operators.graph import host_link_features
-
-    rng = random.Random(7)
-    hosts = [f"h{i}" for i in range(12)]
-    edges = []
-    for _ in range(400):
-        s = rng.choice(hosts[:9])  # h9-h11 are sink-only
-        d = rng.choice(hosts)
-        edges.append((s, d))
-    edges.append(("h0", "h0"))
-
-    out_e = defaultdict(int); in_e = defaultdict(int); self_e = defaultdict(int)
-    out_n = defaultdict(set); in_n = defaultdict(set)
-    for s, d in edges:
-        out_e[s] += 1
-        if s == d:
-            self_e[s] += 1
-        else:
-            in_e[d] += 1
-            out_n[s].add(d)
-            in_n[d].add(s)
-    pairs = {(s, d) for s, d in edges if s != d}
-    expect = {}
-    for h in set(out_e) | set(in_e):
-        oe, ie = out_e.get(h, 0), in_e.get(h, 0)
-        oh, ih = len(out_n.get(h, ())), len(in_n.get(h, ()))
-        recip = sum(1 for d in out_n.get(h, ()) if (d, h) in pairs)
-        expect[h] = (
-            oe, ie, oh, ih,
-            round(self_e.get(h, 0) / oe, 4) if oe else 0.0,
-            round(recip / oh, 4) if oh else 0.0,
-        )
-
-    df = spark.createDataFrame(edges, "src_host STRING, dst_host STRING")
-    got = {
-        r["host"]: (
-            r["out_edges"], r["in_edges"], r["out_hosts"], r["in_hosts"],
-            r["self_frac"], r["recip_frac"],
-        )
-        for r in host_link_features(df.repartition(5)).collect()
-    }
-    assert got == expect

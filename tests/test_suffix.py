@@ -1,6 +1,7 @@
 """Generalized suffix array (prefix doubling) + exact substring dedup:
 python-reference parity on seeded random corpora with planted
-duplicates, plus the staged-query preconditions."""
+duplicates, plus physical-plan guards for the scale claims the
+operator docstrings make."""
 
 from __future__ import annotations
 
@@ -15,7 +16,6 @@ from distributed_crawler_spark.operators.suffix import (
     global_row_number,
     lcp_edges,
     prefix_sum,
-    remove_exact_spans,
     suffix_array,
 )
 
@@ -96,84 +96,6 @@ def _py_exact_dups(docs, min_len=8):
             cnt, mx = out.get(d, (0, 0))
             out[d] = (cnt + 1, max(mx, members[r]))
     return sorted((d, c, m) for d, (c, m) in out.items())
-
-
-def _py_member_spans(docs, min_len=8):
-    """(doc, pos, dup_len) members of cross-doc islands — the shared
-    middle of the dups report and the removal action."""
-    sa = []
-    for d, text in docs:
-        toks = text.split(" ")
-        for p in range(1, len(toks) + 1):
-            sa.append((tuple(toks[p - 1 :]), d, p))
-    sa.sort()
-    lcp = []
-    for i in range(len(sa) - 1):
-        a, b = sa[i][0], sa[i + 1][0]
-        m = min(len(a), len(b))
-        j = 0
-        while j < m and a[j] == b[j]:
-            j += 1
-        lcp.append(j)
-    members = {}
-    for i, v in enumerate(lcp):
-        if v >= min_len:
-            members[i] = max(members.get(i, 0), v)
-            members[i + 1] = max(members.get(i + 1, 0), v)
-    spans = []
-    ranks = sorted(members)
-    island = []
-    islands = []
-    for r in ranks:
-        if island and r == island[-1] + 1 and lcp[r - 1] >= min_len:
-            island.append(r)
-        else:
-            if island:
-                islands.append(island)
-            island = [r]
-    if island:
-        islands.append(island)
-    for isl in islands:
-        if len({sa[r][1] for r in isl}) < 2:
-            continue
-        spans += [(sa[r][1], sa[r][2], members[r]) for r in isl]
-    return spans
-
-
-def _py_removal(docs, min_len=8):
-    spans = _py_member_spans(docs, min_len)
-    cov = {}
-    for d, pos, ln in spans:
-        cov.setdefault(d, set()).update(range(pos, pos + ln))
-    out = []
-    for d, text in docs:
-        if not text:
-            continue
-        toks = text.split(" ")
-        covered = cov.get(d, set())
-        kept = [t for i, t in enumerate(toks, start=1) if i not in covered]
-        out.append((d, len(toks), len(toks) - len(kept), " ".join(kept)))
-    return sorted(out)
-
-
-@pytest.mark.parametrize("seed", [13, 14])
-def test_remove_exact_spans_python_parity(spark, seed):
-    docs = _mk_corpus(seed, 14)
-    df = spark.createDataFrame(docs, "doc_id LONG, text STRING").repartition(6)
-    got = sorted(
-        (r.doc_id, r.n_tokens, r.n_removed, r.text_dedup)
-        for r in remove_exact_spans(df, min_len=8).collect()
-    )
-    want = _py_removal(docs, min_len=8)
-    assert got == want
-    # the planted span must actually be gone from every affected doc
-    removed = [r for r in got if r[2] > 0]
-    assert removed, "no spans removed despite planted duplicates"
-    # untouched docs pass through byte-identical
-    by_doc = dict((d, t) for d, t in docs)
-    for d, n, nr, t in got:
-        if nr == 0:
-            assert t == by_doc[d]
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -286,53 +208,32 @@ def test_global_dense_rank_vs_reference(spark, seed, nkeys):
         assert rk == want_rank[(a, b)], (a, b, rid)
 
 
-def test_sa_oracle_string_order_precondition(spark, sf_dir):
-    """The staged oracle sorts suffixes as space-joined STRINGS; that
-    equals token-wise order only while every token character sorts
-    above ' '.  Assert the corpus keeps that contract."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bad = (
-        docs.select(F.explode(F.split("text", " ")).alias("t"))
-        .filter((F.col("t") == "") | (F.col("t") < " "))
-        .count()
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lcp_edges_no_python_no_cartesian(spark):
+    """The LCP compare is zip_with + array_position (JVM higher-order
+    functions), never a UDF; adjacency is an equi-join on sa_rank."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "b c d e")], "doc_id LONG, text STRING"
     )
-    assert bad == 0
+    plan = _plan(lcp_edges(docs))
+    assert "EvalPython" not in plan
+    assert "CartesianProduct" not in plan
 
 
-def test_staged_queries_against_oracles(spark, sf_dir):
-    """Driver-twin comparison (rows, schema, order-insensitive values)
-    for every staged r07 query — the same gate registry entries face."""
-    import duckdb
-
-    from distributed_crawler_spark.plans import staging_r07
-
-    con = duckdb.connect()
-    for t in ["documents", "embeddings", "events", "orders", "lineitem"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    assert staging_r07.QUERIES, "staging module must not be empty"
-    # r07 promotion is a move into the registry: names must be free
-    from distributed_crawler_spark.plans import registry
-
-    clash = set(staging_r07.QUERIES) & set(registry.QUERIES)
-    assert not clash, f"staged names already registered: {clash}"
-    # staged entries must ALL carry oracles (that is the point of
-    # staging: hash-verifiable on arrival)
-    assert set(staging_r07.ORACLES) == set(staging_r07.QUERIES)
-    for name, fn in staging_r07.QUERIES.items():
-        sdf = fn(spark, sf_dir)
-        srows = sdf.collect()
-        scols = sdf.columns
-        cur = con.execute(staging_r07.ORACLES[name])
-        dcols = [c[0] for c in cur.description]
-        drows = cur.fetchall()
-        assert sorted(scols) == sorted(dcols), name
-        assert len(srows) == len(drows), name
-        # order-insensitive compare on name-sorted columns
-        sidx = sorted(range(len(scols)), key=lambda i: scols[i])
-        didx = sorted(range(len(dcols)), key=lambda i: dcols[i])
-        sset = sorted(tuple(r[i] for i in sidx) for r in srows)
-        dset = sorted(tuple(r[i] for i in didx) for r in drows)
-        assert sset == dset, f"{name}: value mismatch"
-    con.close()
+def test_global_dense_rank_single_range_shuffle(spark):
+    """global_dense_rank's whole point: ONE range exchange on the key,
+    no hash exchange of the data, no join back against a distinct-key
+    table (the broadcast offset join is the only join)."""
+    df = spark.range(1000).select(
+        (F.col("id") % 37).alias("a"), (F.col("id") % 11).alias("b")
+    )
+    ranked, n = global_dense_rank(df, ["a", "b"], "rk", partitions=8)
+    assert n == ranked.select("a", "b").distinct().count()
+    plan = _plan(ranked)
+    # post-checkpoint plan: scan of the checkpointed RDD + broadcast join
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "Exchange hashpartitioning" not in plan
