@@ -2,9 +2,9 @@
 
 ``frontier_round_job`` is the round-candidate scheduling pipeline at an
 amplified scale: explode candidate links → normalize (native) → within-
-round dedup → URL-seen anti-join → robots broadcast join → salted
-per-host budget window. Throughput = candidate URLs in / wall seconds —
-"URLs scheduled+deduped/sec" per BASELINE.json.
+round dedup → ``admit`` (URL-seen anti-join → robots broadcast join →
+salted per-host budget window). Throughput = candidate URLs in / wall
+seconds — "URLs scheduled+deduped/sec" per BASELINE.json.
 
 Amplification replicates the arithmetic corpus model ``amp`` times with
 re-derived doc ids, so the job's size scales linearly while keeping the
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .corpus import HOST_MOD, LINK_COEFFS, MEGA_LT, MEGA_MOD
 from .functions.urls import normalize_url
-from .operators.politeness import host_budget_filter, robots_filter
+from .operators.politeness import admit
 
 
 def _amplified_pages(spark: SparkSession, sf_dir: str, amp: int) -> DataFrame:
@@ -105,9 +105,7 @@ def frontier_round_job(
             "host", F.regexp_extract(F.col("url"), r"^https://([^/]*)", 1)
         )
     )
-    fresh = cand.join(seen, "url", "left_anti")
-    allowed = robots_filter(fresh, robots)
-    scheduled = host_budget_filter(allowed, None, budget)
+    scheduled = admit(cand, budget, seen=seen, robots=robots)
     n_scheduled = scheduled.count()
     wall = time.monotonic() - t0
 
@@ -118,70 +116,6 @@ def frontier_round_job(
         "n_scheduled": n_scheduled,
         "seconds": round(wall, 3),
         "urls_per_sec": round(n_candidates / wall, 1),
-    }
-
-
-def crawl_round_bench_job(
-    spark: SparkSession, corpus_dir: str, amp: int = 8, budget: int = 100
-) -> dict:
-    """The full crawl-round pipeline (simulated fetch → Arrow parse UDF →
-    link explode → dedup anti-join → robots → salted budget window) at
-    ``amp``× the corpus size. This is the north-metric job: throughput =
-    URLs fetched+parsed+scheduled per second.
-
-    Amplification clones each page ``amp`` times with a distinct ?k=
-    query suffix, so every clone is a distinct frontier URL but parse
-    work is real per-row. Parsing runs in per-task Python workers
-    (process-parallel — the part of a crawl round that dominates at
-    scale and scales with cores)."""
-    from .functions.extract import parse_page_udf
-
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    robots = spark.read.parquet(os.path.join(corpus_dir, "robots.parquet"))
-    par = spark.sparkContext.defaultParallelism * 2
-
-    pending = (
-        pages.select("url", "html")
-        .repartition(par)
-        .withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(amp - 1))))
-        .select(
-            F.concat(F.col("url"), F.lit("?k="), F.col("k").cast("string")).alias("url"),
-            "html",
-            "k",
-        )
-    )
-
-    t0 = time.monotonic()
-    # NOTE plan shape: selecting the generator directly over the UDF's
-    # struct field keeps ONE ArrowEvalPython node; the
-    # withColumn-then-select-explode shape makes the optimizer duplicate
-    # the (expensive) UDF into two stacked evaluations
-    links = pending.select(
-        "k",
-        F.explode(parse_page_udf(F.col("html"), F.col("url"))["links"]).alias(
-            "base_link"
-        ),
-    ).select(
-        F.concat(F.col("base_link"), F.lit("?k="), F.col("k").cast("string")).alias("url")
-    )
-    cand = links.distinct().withColumn(
-        "host", F.regexp_extract(F.col("url"), r"^https://([^/]*)", 1)
-    )
-    # 'seen' = the pending set itself (self-links dedup away)
-    seen = pending.select("url")
-    fresh = cand.join(seen, "url", "left_anti")
-    allowed = robots_filter(fresh, robots)
-    scheduled = host_budget_filter(allowed, None, budget)
-    n_scheduled = scheduled.count()
-    wall = time.monotonic() - t0
-
-    n_pages = pending.count()
-    return {
-        "amp": amp,
-        "n_pages": n_pages,
-        "n_scheduled": n_scheduled,
-        "seconds": round(wall, 3),
-        "urls_per_sec": round(n_pages / wall, 1),
     }
 
 
@@ -272,9 +206,7 @@ def crawl_index_round_bench_job(
     cand = links.distinct().withColumn(
         "host", F.regexp_extract(F.col("url"), r"^https://([^/]*)", 1)
     )
-    fresh = cand.join(pending.select("url"), "url", "left_anti")
-    allowed = robots_filter(fresh, robots)
-    scheduled = host_budget_filter(allowed, None, budget)
+    scheduled = admit(cand, budget, seen=pending, robots=robots)
     n_scheduled = scheduled.count()
     wall = time.monotonic() - t0
     parsed.unpersist()

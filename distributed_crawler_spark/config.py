@@ -9,7 +9,7 @@ Reference: /root/reference/src/common/config.py:27-30
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -20,9 +20,6 @@ class CrawlConfig:
     max_urls_per_domain: int = 100
     job_id: str = "job-test-0001"
     respect_robots: bool = True
-    # skew handling: the host-budget window salts every host into
-    # `salt_buckets` sub-partitions (politeness.host_budget_filter)
-    salt_buckets: int = 16
     # failed-fetch retry budget (crawler_node.py:160 max_retries=3 and
     # :887-916 _retry_failed_tasks): a failed URL re-enters the next
     # round's pending with retry_count+1 until the budget is exhausted

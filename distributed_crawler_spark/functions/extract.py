@@ -377,11 +377,6 @@ parse_page_udf = parse_page_udf.asNondeterministic()
 
 
 @pandas_udf(StringType())
-def extract_text_regex_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda h: extract_text_regex_py(_decode(h)))
-
-
-@pandas_udf(StringType())
 def extract_text_soup_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda h: extract_text_soup_py(_decode(h)))
 

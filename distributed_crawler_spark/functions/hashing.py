@@ -31,7 +31,3 @@ def seeded(col: Column, seed: int) -> Column:
     """Seeded variant: hash of '<seed>:<value>' — the family of hash
     functions for minhash signatures."""
     return phash(F.concat(F.lit(f"{seed}:"), col))
-
-
-def seeded_sql(expr: str, seed: int) -> str:
-    return phash_sql(f"'{seed}:' || {expr}")

@@ -158,11 +158,6 @@ def normalize_url_udf(urls: pd.Series) -> pd.Series:
     return urls.map(normalize_url_py)
 
 
-@pandas_udf(StringType())
-def get_domain_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: get_domain_py(u) if u else None)
-
-
 def url_features(df, url_col: str = "url"):
     """Frontier-prioritization URL features — the URL-quality signals a
     production crawler scores candidates with before fetch (shallow

@@ -54,13 +54,6 @@ def shingles_from_tokens(toks_col, n: int = 3):
     return F.transform(idx, lambda i: F.array_join(F.slice(toks_col, i, n), " "))
 
 
-def shingle_array(text_col, n: int = 3):
-    """Shingle array straight from a text column.  Convenience form:
-    the token split is inlined into each lambda element, so prefer
-    projecting token_array() first on hot paths (see shingles())."""
-    return shingles_from_tokens(token_array(text_col), n)
-
-
 def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc: (id, shingle).  Two-step
     select so the token split evaluates once per doc, not once per

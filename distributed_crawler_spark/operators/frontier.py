@@ -8,8 +8,13 @@ master_node.py:450-539 result→enqueue recursion) becomes one bounded
 Spark job per round:
 
     pending_r → fetch-join pages → parse UDF → extracted_r
-             → explode links → normalize → depth gate → anti-join seen
-             → robots filter → salted host-budget window → pending_{r+1}
+             → explode links → normalize → depth gate
+             → admit (anti-join seen → robots filter → salted host-budget
+               window) → pending_{r+1}
+
+``politeness.admit`` is the same gate the seed frontier, the model
+crawl and the bench jobs call, so the admission order lives in one
+function.
 
 Scale notes:
   * the fetch join keys on unique canonical urls; with frontier and pages
@@ -36,7 +41,7 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..functions.extract import parse_page_udf
 from ..functions.urls import get_domain
-from .politeness import host_budget_filter, robots_filter
+from .politeness import admit
 
 
 @dataclass
@@ -116,10 +121,10 @@ def schedule_candidates(
     host_counts: DataFrame | None,
     cfg: CrawlConfig,
 ) -> DataFrame:
-    """Phase 2: link discovery → depth gate → URL-seen anti-join → robots
-    → salted budget window → pending_{round+1}. Pass a *materialized*
-    ``extracted`` (the just-written table read back) so the parse UDF is
-    never re-executed for scheduling.
+    """Phase 2: link discovery → depth gate → ``admit`` (URL-seen
+    anti-join → robots → salted budget window) → pending_{round+1}. Pass
+    a *materialized* ``extracted`` (the just-written table read back) so
+    the parse UDF is never re-executed for scheduling.
 
     Candidate depth is PARENT depth + 1 (master_node.py _enqueue_url's
     new_depth = task.depth + 1), min over parents when several pages link
@@ -142,22 +147,13 @@ def schedule_candidates(
         .withColumn("host", get_domain(F.col("url")))
     )
 
-    # URL-seen dedup: exact left anti join vs every URL ever scheduled
-    # (master_node.py:336-339,352-391 collapsed into one set-oriented join)
-    fresh = candidates.join(seen.select("url"), on="url", how="left_anti")
-
-    if cfg.respect_robots:
-        fresh = robots_filter(fresh, robots)
-
-    budgeted = host_budget_filter(
-        fresh,
-        host_counts,
+    return admit(
+        candidates,
         cfg.max_urls_per_domain,
-        salt_buckets=cfg.salt_buckets,
-    )
-    return budgeted.select(
-        "url", "host", "depth", F.lit(0).alias("retry_count")
-    )
+        seen=seen,
+        robots=robots if cfg.respect_robots else None,
+        prior=host_counts,
+    ).select("url", "host", "depth", F.lit(0).alias("retry_count"))
 
 
 def crawl_round(

@@ -16,14 +16,20 @@ Scale design:
     40% of candidates would make one window partition dominate, so we use
     **two-phase salted ranking**: rank within (host, salt) first — any URL
     ranked > budget inside its salt bucket cannot be in the host's global
-    top-budget — then the exact window runs over ≤ salt_buckets × budget
+    top-budget — then the exact window runs over ≤ SALT_BUCKETS × budget
     survivors per host. No partition processes more than ~budget×k rows.
+
+``admit`` composes the URL-seen anti-join, robots and the budget into
+the one admission gate every frontier builder calls.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# salt sub-partitions per host in phase 1 of the budget window
+SALT_BUCKETS = 16
 
 
 def robots_filter(
@@ -60,7 +66,7 @@ def salted_prefilter(
     max_urls_per_domain: int,
     host_col: str = "host",
     order_col: str = "url",
-    salt_buckets: int = 16,
+    salt_buckets: int = SALT_BUCKETS,
     order_cols: list | None = None,
 ) -> DataFrame:
     """Phase 1 of the budget window: rank within (host, salt) and keep
@@ -94,7 +100,7 @@ def host_budget_filter(
     max_urls_per_domain: int,
     host_col: str = "host",
     order_col: str = "url",
-    salt_buckets: int = 16,
+    salt_buckets: int = SALT_BUCKETS,
     order_cols: list | None = None,
 ) -> DataFrame:
     """Keep, per host, the first (budget − already_consumed) candidates in
@@ -138,6 +144,35 @@ def host_budget_filter(
         )
         .select(*out_cols, "host_budget_rank")
     )
+
+
+def admit(
+    candidates: DataFrame,
+    budget: int,
+    *,
+    seen: DataFrame | None = None,
+    robots: DataFrame | None = None,
+    prior: DataFrame | None = None,
+    order_cols: list | None = None,
+) -> DataFrame:
+    """The admission gate of every frontier: the reference's
+    ``_enqueue_url`` (master_node.py:315-448) after its depth gate, as
+    three set operations in its order:
+
+      1. URL-seen dedup — an exact ``left_anti`` join on url against
+         ``seen`` (master_node.py:336-339,352-391);
+      2. robots — ``robots_filter`` against ``robots``;
+      3. per-host budget — ``host_budget_filter`` keeping each host's
+         first (budget − prior) candidates in ``order_cols`` order
+         (url asc by default); ``prior`` is (host, n_scheduled).
+
+    A step whose argument is None is skipped (no ``prior`` charges
+    nothing). Returns the candidates' columns plus host_budget_rank."""
+    if seen is not None:
+        candidates = candidates.join(seen.select("url"), "url", "left_anti")
+    if robots is not None:
+        candidates = robots_filter(candidates, robots)
+    return host_budget_filter(candidates, prior, budget, order_cols=order_cols)
 
 
 def politeness_waves(

@@ -33,7 +33,6 @@ read by explicit round paths, and counts group seen by host. (north_rule:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -44,7 +43,7 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..functions.urls import get_domain, normalize_url
 from .frontier import fetch_extract, schedule_candidates, with_retry_count
-from .politeness import host_budget_filter, robots_filter
+from .politeness import admit
 
 PENDING, COHORT, EXTRACTED, LINEAGE = "pending", "cohort", "extracted", "lineage"
 ROLLUP = "frontier_rollup"
@@ -93,8 +92,9 @@ def _exists(path: str) -> bool:
 
 
 def seed_frontier(seeds: DataFrame, robots: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Normalize seed URLs (master_node.py:266) and apply the same gates
-    candidates face (robots, host budget) to produce round-0 pending."""
+    """Normalize seed URLs (master_node.py:266) and admit them through
+    the gate candidates face (robots, host budget; nothing is seen yet)
+    to produce round-0 pending."""
     cand = (
         seeds.select(normalize_url(F.col("url")).alias("url"))
         .filter(F.col("url").isNotNull())
@@ -102,10 +102,10 @@ def seed_frontier(seeds: DataFrame, robots: DataFrame, cfg: CrawlConfig) -> Data
         .withColumn("host", get_domain(F.col("url")))
         .withColumn("depth", F.lit(0))
     )
-    if cfg.respect_robots:
-        cand = robots_filter(cand, robots)
-    return host_budget_filter(
-        cand, None, cfg.max_urls_per_domain, salt_buckets=cfg.salt_buckets
+    return admit(
+        cand,
+        cfg.max_urls_per_domain,
+        robots=robots if cfg.respect_robots else None,
     ).select("url", "host", "depth", F.lit(0).alias("retry_count"))
 
 
@@ -272,6 +272,17 @@ class CrawlScheduler:
             # marks the round durable (written LAST — the commit point; a
             # crash before this re-runs the whole round idempotently)
             wall_ms = int((time.monotonic() - t0) * 1000)
+            # round and wall_ms join in as a one-row local table, not as
+            # literals: codegen inlines an int literal into the generated
+            # class, so a per-run wall_ms compiled new classes every
+            # crawl. The nested-loop hint keeps the table from being
+            # broadcast, which would cost one more job per round. AQE
+            # does not coalesce a stage with a non-shuffle leaf, so the
+            # lineage (one row per fetch partition) is coalesced to one file.
+            stamp = self.spark.sql(
+                "SELECT * FROM VALUES (:round, :wall_ms) AS stamp(round, wall_ms)",
+                args={"round": rnd, "wall_ms": wall_ms},
+            ).hint("shuffle_replicate_nl")
             html = F.col("html")
             lineage = (
                 fetched.withColumn("partition_id", F.spark_partition_id())
@@ -281,10 +292,11 @@ class CrawlScheduler:
                     F.count(html).alias("urls_out"),
                     F.coalesce(F.sum(F.length(html)), F.lit(0)).alias("bytes"),
                 )
+                .crossJoin(stamp)
                 .select(
-                    F.lit(rnd).alias("round"), "partition_id", "urls_in",
-                    "urls_out", "bytes", F.lit(wall_ms).alias("wall_ms"),
+                    "round", "partition_id", "urls_in", "urls_out", "bytes", "wall_ms"
                 )
+                .coalesce(1)
             )
             lineage.write.mode("overwrite").parquet(_p(self._root, LINEAGE, rnd))
         finally:

@@ -3,10 +3,12 @@ of the HTML-corpus scheduler (operators/scheduler.py).
 
 Same gates as the reference's _enqueue_url (master_node.py:315-448):
 depth → seen-dedup → robots → host budget (consumed in canonical url-asc
-order); the "fetch" is the links equi-join. The DuckDB oracle is the same
-BFS unrolled into per-round CTEs by ``bfs_sql``.
+order), through the scheduler's gate, ``politeness.admit``; the "fetch"
+is the links equi-join. The DuckDB oracle is the same BFS unrolled into
+per-round CTEs by ``bfs_sql``.
 
-Robots is applied once, to the page set, not once per round. That is
+Robots is applied once, to the page set, not once per round, so each
+round admits with ``seen`` and the budget only. That is
 exact: whether robots admit a URL depends only on its host and path, so
 the gate is a per-row filter that commutes with the link join and the
 URL-seen anti-join. The inputs are built from one pages frame and
@@ -30,7 +32,7 @@ from ..corpus import (
     robots_of_pages,
     seeds_of_pages,
 )
-from ..operators.politeness import host_budget_filter, robots_filter
+from ..operators.politeness import admit, robots_filter
 
 
 def model_crawl_inputs(
@@ -46,7 +48,7 @@ def model_crawl_inputs(
     if with_links:  # read by the seed and the link joins: gate it once
         admissible = admissible.localCheckpoint()
     sched0 = (
-        host_budget_filter(seeds_of_pages(admissible), None, budget)
+        admit(seeds_of_pages(admissible), budget)
         .select("url", "host")
         .localCheckpoint()
     )
@@ -60,14 +62,13 @@ def model_crawl_inputs(
     return sched0, links.localCheckpoint()
 
 
-def fresh_targets(links: DataFrame, frontier: DataFrame, seen: DataFrame) -> DataFrame:
+def fresh_targets(links: DataFrame, frontier: DataFrame) -> DataFrame:
     """One BFS expansion: the distinct targets (url, host, doc_id) linked
-    from ``frontier``'s urls and absent from ``seen``'s."""
+    from ``frontier``'s urls. URL-seen dedup is ``admit``'s."""
     return (
         links.join(frontier.select(F.col("url").alias("src_url")), "src_url")
         .select("url", "host", "doc_id")
         .distinct()
-        .join(seen.select("url"), "url", "left_anti")
     )
 
 
@@ -86,8 +87,8 @@ def model_bfs(
     for rnd in range(1, max_depth + 1):
         # `sched` is the whole round state: the frontier is its last
         # depth, the seen set is all of it, the budget used its host counts
-        fresh = fresh_targets(links, sched.filter(F.col("depth") == rnd - 1), sched)
-        cur = host_budget_filter(fresh, host_counts(sched), budget)
+        fresh = fresh_targets(links, sched.filter(F.col("depth") == rnd - 1))
+        cur = admit(fresh, budget, seen=sched, prior=host_counts(sched))
         sched = sched.unionByName(cur.select("url", "host", F.lit(rnd).alias("depth")))
         if rnd < max_depth:  # the last round stays lazy for the caller
             sched = sched.localCheckpoint()

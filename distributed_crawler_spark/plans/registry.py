@@ -22,6 +22,7 @@ from ..functions.hashing import phash, phash_sql
 from ..functions.urls import get_domain, normalize_url
 from ..operators import dedup, graph, search, similarity, stats, textstats
 from ..operators.politeness import (
+    admit,
     crawl_delay_schedule,
     host_budget_filter,
     robots_filter,
@@ -1669,11 +1670,11 @@ def q_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     window total."""
     budget = 100
     sched0, links = model_crawl_inputs(spark, sf_dir, budget)
-    fresh = fresh_targets(links, sched0, sched0)
+    fresh = fresh_targets(links, sched0)
     pr = _model_pagerank(spark, sf_dir)
     cand = fresh.join(pr, fresh.doc_id == pr.node).select("url", "host", "score")
-    out = host_budget_filter(
-        cand, host_counts(sched0), budget,
+    out = admit(
+        cand, budget, seen=sched0, prior=host_counts(sched0),
         order_cols=[F.col("score").desc(), F.col("url")],
     )
     return out.select("url", "host", "score", "host_budget_rank").orderBy("url")

@@ -129,9 +129,3 @@ def codegen_compile_count(spark: SparkSession) -> int:
     codegen cache hit adds nothing)."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -27,9 +27,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-PAGE_SCHEMA = "url STRING, warc_ts TIMESTAMP, html BINARY"
-
-
 def _parse_warc_bytes(
     blob: bytes, want_type: str = "response"
 ) -> Iterator[tuple[str, str, bytes]]:
@@ -286,9 +283,6 @@ def export_wet(
         False,
         compress,
     )
-
-
-WET_SCHEMA = "url STRING, warc_ts TIMESTAMP, text STRING"
 
 
 def read_wet(spark: SparkSession, path_glob: str) -> DataFrame:

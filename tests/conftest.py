@@ -13,9 +13,12 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 def _corpus_dir() -> str:
+    """One built corpus per (format, sf): a run at another sf must not
+    reuse a corpus another sf built."""
     from distributed_crawler_spark.corpus import CORPUS_FORMAT
 
-    return f"/tmp/dcs_test_corpus_v{CORPUS_FORMAT}"
+    sf = os.path.basename(os.path.normpath(SF_DIR))
+    return f"/tmp/dcs_test_corpus_v{CORPUS_FORMAT}_{sf}"
 
 
 CORPUS_DIR = _corpus_dir()

@@ -80,6 +80,29 @@ def test_back_to_back_and_merged_symbol_pairs(spark):
     }
 
 
+def test_distributed_learn_loop_matches_python_reference(spark, monkeypatch):
+    """The distributed merge loop (one Spark job per merge, taken when
+    the vocabulary exceeds COLLECT_WORDS_MAX), forced with the cap at 0,
+    learns the reference's merges on the corpus and on back-to-back
+    and merged-symbol pairs."""
+    from distributed_crawler_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "COLLECT_WORDS_MAX", 0)
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    corpus = [r["text"] for r in docs.select("text").collect()]
+    small = ["aaaa aaaa aaaa b"]
+    cases = [
+        (docs, corpus, 6),
+        (spark.createDataFrame([(t,) for t in small], "text string"), small, 3),
+    ]
+    for df, texts, merges in cases:
+        got = [
+            (r["rank"], r["lhs"], r["rhs"], r["merged"], r["pair_count"])
+            for r in learn_bpe(df, merges=merges).orderBy("rank").collect()
+        ]
+        assert got == _py_bpe(texts, merges)
+
+
 def test_tie_break_is_lexicographic(spark):
     """Equal-count pairs resolve (lhs, rhs) ascending on both engines."""
     df = spark.createDataFrame([("cd ab",)], "text string")

@@ -1,7 +1,8 @@
 """Every CrawlConfig setting must be read somewhere in the package: a
 field nothing reads is an option that silently does nothing. The
 package's environment knobs are all read in config.py. The default
-driver heap fits the host."""
+driver heap fits the host. The admission chain (robots, then the host
+budget) is composed only in politeness.admit."""
 
 from __future__ import annotations
 
@@ -72,6 +73,34 @@ def test_spark_graft_env_knobs_are_read_only_in_config():
         if key.startswith("SPARK_GRAFT_")
     )
     assert stray == [], f"SPARK_GRAFT_* knobs read outside config.py: {stray}"
+
+
+def functions_calling_all(path: Path, names: set[str]) -> list[str]:
+    """Functions in ``path`` whose body calls every one of ``names``
+    (as ``f(...)`` or ``mod.f(...)``)."""
+    out = []
+    for fn in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        called = {
+            c.func.id if isinstance(c.func, ast.Name) else c.func.attr
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call) and isinstance(c.func, (ast.Name, ast.Attribute))
+        }
+        if names <= called:
+            out.append(fn.name)
+    return out
+
+
+def test_admission_chain_is_composed_only_in_admit():
+    gate = PKG / "operators" / "politeness.py"
+    copies = sorted(
+        f"{path.relative_to(PKG)}: {name}"
+        for path in PKG.rglob("*.py")
+        if path != gate
+        for name in functions_calling_all(path, {"robots_filter", "host_budget_filter"})
+    )
+    assert copies == [], f"robots → budget chain written outside politeness.admit: {copies}"
 
 
 def test_default_driver_memory_is_capped_by_host_memory():
